@@ -256,14 +256,14 @@ def _q_manifest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest's per-column row counts, which must equal the table's row
     count (the bookkeeping invariant)."""
     from boltspark.engine import encode_table
-    from boltspark.engine.stats import column_minmax
+    from boltspark.engine.stats import zone_minmax
 
     _ship(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "value")
     d = tempfile.mkdtemp(prefix="boltspark_minmax_")
     encode_table(ev, f"{d}/blocks", f"{d}/manifest", key_cols=("event_id",),
                  target_partition_bytes=4 << 20, resume=False)
-    mm = column_minmax(spark, f"{d}/blocks", f"{d}/manifest")
+    mm = zone_minmax(spark, f"{d}/blocks", f"{d}/manifest")
     man = spark.read.parquet(f"{d}/manifest")
     mrows = (man.filter(F.col("column") != "__table_meta__")
              .groupBy("column").agg(F.sum("n_rows").alias("manifest_rows")))

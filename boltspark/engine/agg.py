@@ -1,30 +1,43 @@
-"""Compressed-domain aggregation: SUM / COUNT / GROUP-BY-count computed
-from encoded blocks WITHOUT materializing rows — optionally under a
-pushed predicate (the full WHERE -> aggregate pipeline in one pass).
+"""Compressed-domain aggregation: one aggregate core under every SUM /
+COUNT / AVG / MIN / MAX / GROUP BY operator, computed from encoded
+blocks WITHOUT materializing rows — optionally under a pushed predicate
+(the full WHERE -> aggregate pipeline in one pass).
 
 The reference stops at zone statistics (footer min/max,
 parquet_metadata_thrift.rs:657); this module pushes whole aggregations
 into the encoded domain, the classic "compute on compressed data" move
-of column stores:
+of column stores.  The core has three parts:
 
-* ``rle`` blocks aggregate over (run_value, run_length) pairs — O(runs)
-  instead of O(rows), no ``np.repeat`` materialization;
-* ``dict`` blocks aggregate over (dictionary, code histogram) —
-  ``np.bincount`` of the code stream plus one pass over the distinct
-  values, never touching the decoded strings;
-* every other codec decodes the block normally but reduces it INSIDE
-  the task, so exactly one partial-aggregate row per block crosses the
-  executor boundary (map-side combine below the row level).
+* ``_scan`` projects only the block leaves an aggregate needs (plus the
+  stats leaf of every predicate column), applies the JVM zone prefilter
+  so provably-dead groups never cross into Python, and broadcast-joins
+  the manifest's valid (part_id, run_id) pairs;
+* ``_groups`` walks a task's surviving block groups and resolves each
+  group's predicate once: zone maps answer all/none without opening a
+  block, groups where only SOME rows survive get a row mask;
+* ``_block_partial`` is the one per-block partial kernel.  It takes
+  0..N GROUP BY dimensions (0 = a global aggregate; a mixed-radix
+  composite code for N >= 2) and computes, per value column, the lanes
+  count / valid count, int64 + double sum, exact unscaled decimal sum
+  (int64 low words and d128 word pairs) and typed min/max (byte values
+  by dictionary rank).  ``_fold`` is the one final
+  ``groupBy(dims).agg(...)`` over its partial rows.
 
-With a ``predicate``, the same cascade the decoder runs applies first:
-JVM zone prefilters drop provably-dead groups before their bytes cross
-into Python, zone maps answer all/none without opening the block, and
-groups where only SOME rows survive reduce over a late-materialized
-selective decode (only surviving rows are ever decoded).
+The compressed-domain shortcuts are cases inside that kernel, chosen
+from each block's codec: without group dimensions ``rle`` blocks reduce
+over (run_value, run_length) pairs (no ``np.repeat``) and ``dict``
+blocks over (dictionary, code histogram); a lone GROUP BY column
+(value_counts) counts its runs or its code histogram the same way.
+Partially-surviving groups reduce a selective decode of only the
+surviving rows.  Every other codec decodes and reduces INSIDE the task,
+so one partial row per (block, group) crosses one small shuffle — at
+100 TB a GROUP BY over a dictionary-coded flag moves n_blocks x
+n_distinct tiny rows instead of n_rows values.
 
-At 100 TB the difference is structural: a GROUP BY over a dictionary-
-coded flag column moves (n_blocks x n_distinct) tiny rows through one
-final shuffle instead of n_rows values.
+The public sum/count/avg/min/max/value_counts/distinct/grouped
+operators are thin shapes over the core.  The sketch operators
+(HyperLogLog distinct, quantile summaries, top-k) keep their own lanes
+but iterate the same ``_groups``.
 """
 
 from __future__ import annotations
@@ -32,6 +45,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from ..kernels import block as blockmod
 from ..kernels import dictionary, lists, strings
@@ -41,6 +55,32 @@ from .memutil import trimmed
 from .schema import PART_ID, read_blocks as schema_read_blocks
 
 
+def _fields(meta: dict) -> dict:
+    """Column name -> StructField of the table schema."""
+    import json
+
+    schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+    return {f.name: f for f in schema.fields}
+
+
+def _arrow_type(spark: SparkSession, dt) -> pa.DataType:
+    from .decode import arrow_out_type
+
+    return arrow_out_type(dt, spark.conf.get("spark.sql.session.timeZone",
+                                             "UTC"))
+
+
+def _is_bytes(dt) -> bool:
+    return dt.typeName() in ("string", "binary")
+
+
+def _require(tag, what: str, bytes_ok: bool = True, d128_ok: bool = False):
+    """Refuse an aggregate over a physical tag it is not defined for."""
+    if (tag in lists.LIST_TAGS or (tag == "bytes" and not bytes_ok)
+            or (tag == "d128" and not d128_ok)):
+        raise TypeError(f"{what} over tag {tag!r} is not defined")
+
+
 def _open_dense(blk: bytes):
     """open_block + the n_valid arithmetic every aggregate needs."""
     payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
@@ -48,125 +88,14 @@ def _open_dense(blk: bytes):
     return payload, meta, tag, codec, n_rows, n_valid
 
 
-def _reduce_sum(v: np.ndarray, weights: np.ndarray | None = None):
-    if v.dtype.kind == "f":
-        w = weights.astype(np.float64) if weights is not None else None
-        return float(np.dot(v.astype(np.float64), w) if w is not None
-                     else v.sum(dtype=np.float64))
-    w = weights.astype(np.int64) if weights is not None else None
-    return int(np.dot(v.astype(np.int64), w) if w is not None
-               else v.sum(dtype=np.int64))
+def _n_sel(n_rows: int, mask) -> int:
+    return n_rows if mask is None else int(mask.sum())
 
 
-def _check_sum_tag(tag: str):
-    if tag in ("bytes", "d128") or tag in lists.LIST_TAGS:
-        raise TypeError(f"sum over tag {tag!r} is not defined")
-
-
-def _block_sum(blk: bytes) -> tuple[float | int, int, int]:
-    """(sum_of_non_null, n_rows, n_valid) for one numeric block.
-
-    rle sums run_value * run_length (O(runs)); dict sums
-    dictionary[code] via the code histogram (O(distinct + codes));
-    other codecs decode-and-reduce in the task.
-    """
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    _check_sum_tag(tag)
-    if codec == "rle":
-        run_values, run_lengths = blockmod.decode_rle_runs(
-            payload, meta, n_valid, tag)
-        return _reduce_sum(np.asarray(run_values), run_lengths), n_rows, n_valid
-    if codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        cnt = np.bincount(codes, minlength=len(uniques))
-        return _reduce_sum(np.asarray(uniques), cnt), n_rows, n_valid
-    values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    return _reduce_sum(np.asarray(values)), n_rows, n_valid
-
-
-def _block_sum_masked(blk: bytes, mask: np.ndarray) -> tuple[float | int, int, int]:
-    """Masked variant: decode ONLY the surviving rows (late
-    materialization) and reduce them; (sum, n_selected, n_valid_selected)."""
-    values, validity_sel, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-    _check_sum_tag(tag)
-    v = np.asarray(values)
-    return _reduce_sum(v), n_sel, len(v)
-
-
-def _sum_d128_pairs(pairs: np.ndarray) -> int:
-    """Exact sum of (lo, hi) int64 word pairs: value = hi*2^64 + lo_u,
-    so sum = 2^64 * sum(hi) + sum(lo_u), both folded in arbitrary-
-    precision Python ints (never overflows, never rounds)."""
-    if not len(pairs):
-        return 0
-    lo_u = pairs[:, 0].astype(np.uint64)
-    hi = pairs[:, 1]
-    return (int(hi.astype(object).sum()) << 64) + int(lo_u.astype(object).sum())
-
-
-def _block_sum_dec(blk: bytes, mask) -> tuple[int, int, int]:
-    """Exact unscaled-integer sum for a decimal column block (tag i64
-    for p<=18, tag d128 word pairs for p<=38) -> (sum, n_rows_or_sel,
-    n_valid).  ``mask`` is 'all' or a bool row mask."""
-    if isinstance(mask, str):  # 'all'
-        payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-        if tag == "d128":
-            pairs = np.asarray(blockmod.decode_values(
-                payload, meta, n_valid, tag, codec))
-            return _sum_d128_pairs(pairs), n_rows, n_valid
-        s, n_rows, n_valid = _block_sum(blk)
-        return int(s), n_rows, n_valid
-    values, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-    v = np.asarray(values)
-    if tag == "d128":
-        return _sum_d128_pairs(v), n_sel, len(v)
-    _check_sum_tag(tag)
-    return int(_reduce_sum(v)), n_sel, len(v)
-
-
-def _block_value_counts(blk: bytes):
-    """(values, counts, n_null) for one block — values stay in their
-    kernel representation (StringColumn for bytes, ndarray otherwise),
-    counts int64, nulls reported separately (SQL GROUP BY semantics)."""
-    payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    if tag == "d128" or tag in lists.LIST_TAGS:
-        raise TypeError(f"value_counts over tag {tag!r} is not defined")
-    n_null = n_rows - n_valid
-    if codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        cnt = np.bincount(codes, minlength=len(uniques)).astype(np.int64)
-        return uniques, cnt, n_null
-    if codec == "rle" and tag != "bytes":
-        run_values, run_lengths = blockmod.decode_rle_runs(
-            payload, meta, n_valid, tag)
-        u, inv = np.unique(np.asarray(run_values), return_inverse=True)
-        cnt = np.zeros(len(u), dtype=np.int64)
-        np.add.at(cnt, inv, run_lengths.astype(np.int64))
-        return u, cnt, n_null
-    values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    return _counts_of(values, tag, n_null)
-
-
-def _block_value_counts_masked(blk: bytes, mask: np.ndarray):
-    values, validity_sel, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-    if tag == "d128" or tag in lists.LIST_TAGS:
-        raise TypeError(f"value_counts over tag {tag!r} is not defined")
-    return _counts_of(values, tag, n_sel - len(values))
-
-
-def _counts_of(values, tag: str, n_null: int):
-    if tag == "bytes":
-        import pyarrow.compute as pc
-
-        vc = pc.value_counts(strings.to_arrow(values))
-        varr = vc.field("values")
-        if isinstance(varr, pa.ChunkedArray):
-            varr = varr.combine_chunks()
-        u = strings.from_arrow(varr)
-        cnt = np.asarray(vc.field("counts")).astype(np.int64)
-        return u, cnt, n_null
-    u, cnt = np.unique(np.asarray(values), return_counts=True)
-    return u, cnt.astype(np.int64), n_null
+def _normalize_predicates(predicate) -> list[Predicate]:
+    if predicate is None:
+        return []
+    return predicate if isinstance(predicate, list) else [predicate]
 
 
 def _pred_cols(predicates) -> list[str]:
@@ -178,10 +107,11 @@ def _pred_cols(predicates) -> list[str]:
 
 
 def _resolve_mask(blk_cols, st_cols, i: int, predicates):
-    """The decoder's zone/mask cascade for one block group ->
-    'none' | 'all' | full-length bool mask (decode.eval_group_predicate
-    reused, so dictionary-level predicate evaluation, the ternary null
-    rule, and composite OR/NOT semantics apply identically here)."""
+    """The decoder's zone/mask cascade for one block group -> False (no
+    row survives) | None (every row does) | full-length bool mask
+    (decode.eval_group_predicate reused, so dictionary-level predicate
+    evaluation, the ternary null rule, and composite OR/NOT semantics
+    apply identically here)."""
     from .decode import eval_group_predicate
 
     blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
@@ -190,173 +120,625 @@ def _resolve_mask(blk_cols, st_cols, i: int, predicates):
     for pred in predicates:
         verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
         if verdict == "none":
-            return "none"
+            return False
         if pmask is not None:
             mask = pmask if mask is None else (mask & pmask)
             if not mask.any():
-                return "none"
-    return "all" if mask is None else mask
+                return False
+    return mask
 
 
-def _normalize_predicates(predicate) -> list[Predicate]:
-    if predicate is None:
-        return []
-    return predicate if isinstance(predicate, list) else [predicate]
-
-
-def _blocks_proj(spark: SparkSession, blocks_path: str, manifest_path: str,
-                 column: str, predicates: list[Predicate],
-                 value_column: str | None = None,
-                 run_ids: list[str] | None = None,
-                 meta: dict | None = None,
-                 extra_group_columns: list[str] | None = None,
-                 extra_value_columns: list[str] | None = None) -> DataFrame:
+def _scan(spark: SparkSession, blocks_path: str, manifest_path: str,
+          columns: list[str], predicates: list[Predicate],
+          run_ids: list[str] | None = None,
+          meta: dict | None = None) -> DataFrame:
+    """The one blocks projection every aggregate reads: part_id, run_id,
+    n_rows, one ``__b_<col>`` block leaf per needed column (the scan's
+    ReadSchema prunes to exactly these leaves — never the giant content
+    chunk) and the ``__st_<col>`` stats leaf of every predicate column.
+    ``run_ids`` scopes the scan to some runs (time travel, streaming
+    epochs: parquet run_id stats prune the rest).  The JVM zone
+    prefilter drops provably-dead groups before their bytes cross into
+    Python; the broadcast join keeps only the manifest's valid pairs."""
     if meta is None:
         meta = manifestmod.table_meta(spark, manifest_path)
-    known = set(meta["columns"])
-    extra = [value_column] if value_column is not None else []
-    extra += list(extra_group_columns or [])
-    extra += list(extra_value_columns or [])
-    for c in [column] + extra + _pred_cols(predicates):
-        if c not in known:
+    pcols = _pred_cols(predicates)
+    for c in list(columns) + pcols:
+        if c not in meta["columns"]:
             raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows"),
-            F.col("cols").getField(column).getField("block").alias("__blk")]
-    if value_column is not None:
-        proj.append(F.col("cols").getField(value_column).getField("block")
-                    .alias("__blk2"))
-    for j, c in enumerate(extra_group_columns or [], start=1):
-        # additional GROUP BY columns (grouped_sum_multi): the wide
-        # layout aligns them in the same parquet row as __blk/__blk2
-        proj.append(F.col("cols").getField(c).getField("block")
-                    .alias(f"__gblk_{j}"))
-    for j, c in enumerate(extra_value_columns or [], start=1):
-        # additional aggregated columns (grouped_aggs): same alignment
-        proj.append(F.col("cols").getField(c).getField("block")
-                    .alias(f"__vblk_{j}"))
-    for pc_ in _pred_cols(predicates):
-        proj.append(F.col("cols").getField(pc_).getField("block")
-                    .alias(f"__blk_{pc_}"))
-        proj.append(F.col("cols").getField(pc_).getField("stats")
-                    .alias(f"__st_{pc_}"))
-    blocks = (schema_read_blocks(spark, blocks_path, meta["columns"])
-              .select(*proj))
+    leaf = lambda c, f: F.col("cols").getField(c).getField(f)  # noqa: E731
+    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
+    proj += [leaf(c, "block").alias(f"__b_{c}")
+             for c in dict.fromkeys(list(columns) + pcols)]
+    proj += [leaf(c, "stats").alias(f"__st_{c}") for c in pcols]
+    blocks = schema_read_blocks(spark, blocks_path, meta["columns"]).select(*proj)
     if run_ids is not None:
-        # incremental scope (streaming aggregation): only these runs'
-        # groups are read — parquet run_id stats prune the rest
         blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    # JVM zone prefilter: provably-dead groups never cross into Python
-    keeps = [k for k in (p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-                         for p in predicates) if k is not None]
-    for k in keeps:
-        blocks = blocks.filter(k)
+    for p in predicates:
+        keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
+        if keep is not None:
+            blocks = blocks.filter(keep)
     valid = manifestmod.valid_pairs_df(spark, manifest_path)
     return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+
+
+def _groups(batches, predicates: list[Predicate], columns: list[str]):
+    """A task's surviving block groups -> (part_id, n_rows, mask,
+    {column: block bytes | None}).  The per-batch preamble of every
+    aggregate lives here once: groups no row of which survives the
+    predicate are skipped, ``mask`` is None when every row survives and
+    a bool row mask otherwise, and a None block is a column the group's
+    run predates (schema evolution: every row of it is NULL)."""
+    pcols = _pred_cols(predicates)
+    for batch in batches:
+        get = dict(zip(batch.schema.names, batch.columns))
+        pids, grows = get[PART_ID], get["n_rows"]
+        blks = {c: get[f"__b_{c}"] for c in columns}
+        blk_cols = {c: get[f"__b_{c}"] for c in pcols}
+        st_cols = {c: get[f"__st_{c}"] for c in pcols}
+        for i in range(batch.num_rows):
+            mask = _resolve_mask(blk_cols, st_cols, i, predicates)
+            if mask is False:
+                continue
+            yield (pids[i].as_py(), grows[i].as_py(), mask,
+                   {c: (b[i].as_py() if b[i].is_valid else None)
+                    for c, b in blks.items()})
+
+
+# ---------------------------------------------------------------------------
+# the one partial kernel
+# ---------------------------------------------------------------------------
+
+
+def _group_codes(blk, n_rows: int, multiset: bool = False,
+                 counted: bool = True):
+    """One GROUP BY dimension of a block -> (uniques, codes, weights).
+
+    Row-aligned (default): one code per row, null rows -1, weights None.
+    Dict blocks hand their code stream over directly (the group strings
+    are never materialized); everything else labels its decoded values.
+    ``multiset=True`` (a lone dimension with nothing to align to) gives
+    one code per distinct value weighted by its row count instead: rle
+    blocks sum run lengths (no np.repeat), dict blocks bincount their
+    codes, and the null rows ride as code -1 with their own weight.
+    ``counted=False`` (DISTINCT: only which values occur matters) lets a
+    multiset dict block hand over its dictionary without decoding the
+    code stream — every entry occurs by construction — each weighted 1."""
+    if blk is None:  # evolved column: every row is the NULL group
+        return None, np.full(n_rows, -1, dtype=np.int64), None
+    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
+    _require(tag, "group-by")
+    n_valid = int(validity.sum()) if validity is not None else n_rows
+    runs = None
+    if codec == "dict" and multiset and not counted:
+        uniques = dictionary.decode_dictionary(payload, meta, tag)
+        codes = np.arange(len(uniques), dtype=np.int64)
+    elif codec == "dict":
+        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
+        codes = codes.astype(np.int64)
+    elif codec == "rle":
+        rv, runs = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
+        uniques, codes = np.unique(np.asarray(rv), return_inverse=True)
+        runs = runs.astype(np.int64)
+    else:
+        values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
+        if tag == "bytes":
+            # per-block unique order is irrelevant: the final fold
+            # merges partials by value
+            de = strings.to_arrow(values).dictionary_encode()
+            uniques = strings.from_arrow(de.dictionary)
+            codes = np.asarray(de.indices).astype(np.int64)
+        else:
+            uniques, codes = np.unique(np.asarray(values), return_inverse=True)
+    if multiset:
+        weights = np.bincount(codes, weights=runs,
+                              minlength=len(uniques)).astype(np.int64)
+        codes = np.arange(len(uniques), dtype=np.int64)
+        if n_rows > n_valid:
+            codes = np.append(codes, -1)
+            weights = np.append(weights, n_rows - n_valid)
+        return uniques, codes, weights
+    if runs is not None:
+        codes = np.repeat(codes, runs)
+    if validity is None:
+        return uniques, codes, None
+    full = np.full(n_rows, -1, dtype=np.int64)
+    full[validity] = codes
+    return uniques, full, None
+
+
+def _keys(uniques, slots: np.ndarray, out_t: pa.DataType,
+          is_bytes: bool) -> pa.Array:
+    """Typed group-key array for per-block slots (slot 0 = the NULL
+    group, slot s = uniques[s - 1])."""
+    base = pa.nulls(1, out_t)
+    if uniques is not None and len(uniques):
+        ua = (strings.to_arrow(uniques) if is_bytes
+              else pa.array(np.asarray(uniques)))
+        base = pa.concat_arrays([base, ua if ua.type.equals(out_t)
+                                 else ua.cast(out_t)])
+    return base.take(pa.array(np.asarray(slots, dtype=np.int64)))
+
+
+def _group_ids(dims, n_rows: int, mask, multiset: bool = False,
+               counted: bool = True):
+    """Group ids of one block group's selected rows over 0..N dimensions
+    ``dims`` = [(block, out_t, is_bytes)] -> (gid, n_groups, cnt, kept,
+    keys): ``gid`` per selected row (None when there is no dimension:
+    one global group), ``cnt`` rows per group id, ``kept`` the ascending
+    ids of the groups present and ``keys`` one typed key array per
+    dimension over ``kept``.  The composite id is mixed-radix over the
+    per-block dictionaries (slot 0 = NULL); it is used directly as the
+    bincount index while the radix product stays small (always for a
+    multiset, whose codes are dense), and compacted through np.unique
+    otherwise.  ``multiset``/``counted`` pass to ``_group_codes``."""
+    if not dims:
+        return None, 1, np.array([_n_sel(n_rows, mask)]), None, []
+    coded = [_group_codes(b, n_rows, multiset, counted)
+             for b, _t, _ib in dims]
+    sizes = [(len(u) if u is not None else 0) + 1 for u, _c, _w in coded]
+    radix = 1
+    for s in sizes:  # python ints: no wraparound in the check
+        radix *= s
+    if radix >= 1 << 63:
+        raise ValueError(
+            "composite group code would overflow int64: per-block "
+            f"dictionary sizes {sizes} multiply to {radix}; group by "
+            "fewer/lower-cardinality columns or use smaller blocks")
+    comp = coded[0][1] + 1
+    for s, (_u, codes, _w) in zip(sizes[1:], coded[1:]):
+        comp = comp * s + (codes + 1)
+    if mask is not None:
+        comp = comp[mask]
+    # a multiset's codes are already dense (0..U): always direct, so
+    # its row-count weights are the counts
+    if multiset or radix <= max(len(comp), 1 << 12):
+        gid, n_groups = comp, radix
+        cnt = np.bincount(gid, weights=coded[0][2], minlength=radix)
+        kept = np.nonzero(cnt)[0]
+        keys = kept
+    else:
+        keys, gid = np.unique(comp, return_inverse=True)
+        n_groups = len(keys)
+        cnt = np.bincount(gid, minlength=n_groups)
+        kept = np.arange(n_groups)
+    slots = []
+    for s in reversed(sizes[1:]):
+        slots.append(keys % s)
+        keys = keys // s
+    slots.append(keys)
+    return (gid, n_groups, cnt.astype(np.int64), kept,
+            [_keys(u, slot, t, ib) for (u, _c, _w), slot, (_b, t, ib)
+             in zip(coded, reversed(slots), dims)])
+
+
+def _value_ranks(payload, vmeta, nval: int, vtag: str, vcodec: str):
+    """Dense value stream of one block -> (ranks, base, rank_to_idx)
+    for order-based grouped reductions (grouped min/max, grouped_topk).
+    Byte values rank through the dictionary — sorted dict blocks hand
+    the code stream over AS the rank; other codecs rank each block
+    distinct once via sort_indices — so strings never compare
+    row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
+    (``base.take(rank_to_idx[rank])``); numeric values rank as
+    themselves (base=None)."""
+    import pyarrow.compute as pc
+
+    if vtag == "bytes":
+        if vcodec == "dict":
+            uv, vcodes = dictionary.decode_parts(payload, vmeta, nval, vtag)
+            return (vcodes.astype(np.int64), strings.to_arrow(uv),
+                    np.arange(len(uv), dtype=np.int64))
+        vals = blockmod.decode_values(payload, vmeta, nval, vtag, vcodec)
+        de = strings.to_arrow(vals).dictionary_encode()
+        base = de.dictionary
+        order0 = np.asarray(pc.sort_indices(base))
+        rank_of = np.empty(len(base), np.int64)
+        rank_of[order0] = np.arange(len(base))
+        return (rank_of[np.asarray(de.indices).astype(np.int64)],
+                base, order0.astype(np.int64))
+    return (np.asarray(blockmod.decode_values(payload, vmeta, nval, vtag,
+                                              vcodec)), None, None)
+
+
+def _global_values(blk, n_rows: int, mask, need: bool):
+    """A value column reduced as one group -> (values, weights, tag,
+    n_valid, codec): the block's non-null values as a multiset.  rle
+    blocks give (run values, run lengths) and dict blocks (dictionary,
+    code histogram) — no row is materialized; a partial selection
+    decodes only its surviving rows; ``need=False`` (COUNT) reads the
+    validity bitmap alone, so it works for every tag."""
+    if blk is None:  # evolved column: all NULL here
+        return np.zeros(0, dtype=np.int64), None, None, 0, None
+    if mask is not None and need:
+        vals, _v, tag, codec, _n = blockmod.decode_block_rows(blk, mask)
+        return vals, None, tag, len(vals), None
+    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
+    if not need:
+        if validity is None:
+            return None, None, tag, _n_sel(n_rows, mask), codec
+        return None, None, tag, int(
+            (validity if mask is None else validity[mask]).sum()), codec
+    n_valid = int(validity.sum()) if validity is not None else n_rows
+    if codec == "rle":
+        rv, rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
+        return np.asarray(rv), rl, tag, n_valid, codec
+    if codec == "dict":
+        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
+        return (uniques, np.bincount(codes, minlength=len(uniques)), tag,
+                n_valid, codec)
+    return (blockmod.decode_values(payload, meta, n_valid, tag, codec), None,
+            tag, n_valid, codec)
+
+
+def _aligned_values(blk, n_rows: int, mask, gid: np.ndarray, need: bool):
+    """A value column aligned with the selected rows' group ids ->
+    (values, gid of each non-null selected value, tag, ranked).  Byte
+    values come as dictionary ranks with ``ranked`` = (base,
+    rank_to_idx) to map them back (see ``_value_ranks``)."""
+    if blk is None:  # evolved column: all NULL here
+        return (np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
+                None, None)
+    payload, validity, meta, tag, codec, n = blockmod.open_block(blk)
+    rows = np.nonzero(mask)[0] if mask is not None else None
+    if validity is None:
+        ok, dense, n_valid = None, rows, n
+    else:
+        ok = validity if rows is None else validity[rows]
+        n_valid = int(validity.sum())
+        dense = None if rows is None else (np.cumsum(validity) - 1)[rows[ok]]
+    gidv = gid if ok is None else gid[ok]
+    if not need:
+        return None, gidv, tag, None
+    vals, base, rank_to_idx = _value_ranks(payload, meta, n_valid, tag, codec)
+    if dense is not None:
+        vals = vals[dense]
+    return vals, gidv, tag, (None if base is None else (base, rank_to_idx))
+
+
+def _total(v: np.ndarray, w) -> int | float:
+    """Sum of one group's values (weighted by run/code counts)."""
+    if v.dtype.kind == "f":
+        return float(np.dot(v.astype(np.float64), w.astype(np.float64))
+                     if w is not None else v.sum(dtype=np.float64))
+    return int(np.dot(v.astype(np.int64), w.astype(np.int64))
+               if w is not None else v.sum(dtype=np.int64))
+
+
+def _sum_lane(vals, w, gidv, n_groups: int, tag):
+    """-> (s_l int64, s_d float64, is_f) per group: exact int64 for
+    integer storage, float64 for floats."""
+    _require(tag, "sum", bytes_ok=False)
+    v = np.asarray(vals)
+    is_f = v.dtype.kind == "f"
+    s_l = np.zeros(n_groups, dtype=np.int64)
+    s_d = np.zeros(n_groups, dtype=np.float64)
+    if gidv is None:
+        (s_d if is_f else s_l)[0] = _total(v, w)
+    elif is_f:
+        s_d = np.bincount(gidv, weights=v, minlength=n_groups)
+    else:
+        np.add.at(s_l, gidv, v.astype(np.int64))
+    return s_l, s_d, np.full(n_groups, is_f)
+
+
+def _d128_ints(pairs: np.ndarray) -> np.ndarray:
+    """(lo, hi) int64 word pairs -> exact Python ints hi*2^64 + lo_u."""
+    return ((pairs[:, 1].astype(object) << 64)
+            + pairs[:, 0].astype(np.uint64).astype(object))
+
+
+def _dec_lane(vals, w, gidv, n_groups: int, tag) -> pa.Array:
+    """Exact unscaled decimal sums per group as decimal(38,0): int64
+    low words (p<=18) and d128 word pairs fold in arbitrary-precision
+    Python ints (never round; overflow past 38 digits is loud at the
+    Arrow boundary, never silent)."""
+    _require(tag, "decimal sum", bytes_ok=False, d128_ok=True)
+    v = np.asarray(vals)
+    if gidv is None:
+        if tag == "d128":
+            total = ((int(v[:, 1].astype(object).sum()) << 64)
+                     + int(v[:, 0].astype(np.uint64).astype(object).sum())
+                     if len(v) else 0)
+        else:
+            total = int(_total(v, w))
+        return _dec_arr([total], pa.decimal128(38, 0))
+    s = np.zeros(n_groups, dtype=object)
+    np.add.at(s, gidv, _d128_ints(v) if tag == "d128" else v.astype(object))
+    return _dec_arr(s, pa.decimal128(38, 0))
+
+
+def _d128_minmax(pairs: np.ndarray) -> tuple[int, int]:
+    """(min, max) of (lo, hi) int64 word pairs as exact Python ints —
+    signed-128 order = lexicographic (hi signed, lo unsigned)."""
+    order = np.lexsort((pairs[:, 0].astype(np.uint64), pairs[:, 1]))
+    ints = _d128_ints(pairs[[order[0], order[-1]]])
+    return ints[0], ints[1]
+
+
+def _dec_arr(unscaled_ints, out_t: pa.DataType) -> pa.Array:
+    """Vector of unscaled ints (python ints / int64s, None allowed) ->
+    arrow decimal array.  Per-element Decimal construction — callers
+    only pass aggregate RESULTS (<= k per block / one per group), never
+    row streams."""
+    import decimal as dec
+
+    return pa.array([None if x is None
+                     else dec.Decimal(int(x)).scaleb(-out_t.scale)
+                     for x in unscaled_ints], out_t)
+
+
+def _minmax_lane(vals, gidv, n_groups: int, nv: np.ndarray, tag, codec,
+                 ranked, out_t: pa.DataType, is_dec: bool):
+    """Typed (min, max) arrays per group, value-exact (int64 beyond
+    2^53, byte strings and decimals never round through float64).  One
+    group: sorted dict blocks answer from the dictionary's head/tail,
+    rle blocks reduce run values, d128 pairs by signed-128 order.
+    Grouped: np.minimum/maximum.at over the values (byte values over
+    their dictionary ranks)."""
+    import pyarrow.compute as pc
+
+    _require(tag, "min/max", d128_ok=gidv is None)
+    got = nv > 0
+    if gidv is None:
+        if not len(vals):
+            return pa.nulls(1, out_t), pa.nulls(1, out_t)
+        if tag == "d128":
+            lo, hi = _d128_minmax(np.asarray(vals))
+        elif codec == "dict":  # sorted dictionary
+            lo, hi = vals[0], vals[len(vals) - 1]
+        elif tag == "bytes":
+            mm = pc.min_max(strings.to_arrow(vals))
+            lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        else:
+            v = np.asarray(vals)
+            lo, hi = v.min(), v.max()
+        if is_dec:
+            return _dec_arr([lo], out_t), _dec_arr([hi], out_t)
+        if tag == "bytes":
+            return (pa.array([lo]).cast(out_t), pa.array([hi]).cast(out_t))
+        mins, maxs = np.asarray([lo]), np.asarray([hi])
+    else:
+        v = np.asarray(vals)
+        if v.dtype.kind == "f":
+            mins = np.full(n_groups, np.inf)
+            maxs = np.full(n_groups, -np.inf)
+        else:
+            v = v.astype(np.int64)
+            ii = np.iinfo(np.int64)
+            mins = np.full(n_groups, ii.max, dtype=np.int64)
+            maxs = np.full(n_groups, ii.min, dtype=np.int64)
+        np.minimum.at(mins, gidv, v)
+        np.maximum.at(maxs, gidv, v)
+        if ranked is not None:  # byte ranks -> dictionary values
+            base, rank_to_idx = ranked
+
+            def back(r):
+                if not got.any():
+                    return pa.nulls(n_groups, out_t)
+                idx = np.where(got, rank_to_idx[np.where(got, r, 0)], 0)
+                arr = base.take(pa.array(idx, mask=~got))
+                return arr if arr.type.equals(out_t) else arr.cast(out_t)
+
+            return back(mins), back(maxs)
+        if is_dec:
+            return (_dec_arr([m if g else None for m, g in zip(mins, got)],
+                             out_t),
+                    _dec_arr([m if g else None for m, g in zip(maxs, got)],
+                             out_t))
+
+    def typed(a):
+        arr = pa.array(a, mask=~got)
+        return arr if arr.type.equals(out_t) else arr.cast(out_t)
+
+    return typed(mins), typed(maxs)
+
+
+def _block_partial(n_rows: int, mask, dims, values,
+                   counted: bool = True) -> dict:
+    """THE per-block partial kernel.  ``dims`` = [(block, out_t,
+    is_bytes)] (0..N group dimensions), ``values`` = [(block, lanes,
+    out_t, is_dec)] with lanes drawn from ("sum", "dec", "minmax") ->
+    {partial column: array over the groups present}: g0..g{N-1},
+    cnt (selected rows), and per value j nv{j} (non-null values) plus
+    its lanes' columns s_l{j}/s_d{j}/is_f{j}, s_dec{j}, mn{j}/mx{j}.
+    ``counted=False`` (DISTINCT) may leave cnt at 1 per group present."""
+    multiset = mask is None and len(dims) == 1 and not values
+    gid, n_groups, cnt, kept, keys = _group_ids(dims, n_rows, mask, multiset,
+                                                counted)
+    out = {"cnt": cnt}
+    for j, (blk, lanes, out_t, is_dec) in enumerate(values):
+        if gid is None:
+            vals, w, tag, n_valid, codec = _global_values(
+                blk, n_rows, mask, bool(lanes))
+            gidv, ranked, nv = None, None, np.array([n_valid])
+        else:
+            vals, gidv, tag, ranked = _aligned_values(
+                blk, n_rows, mask, gid, bool(lanes))
+            w = codec = None
+            nv = np.bincount(gidv, minlength=n_groups)
+        out[f"nv{j}"] = nv
+        if "sum" in lanes:
+            out[f"s_l{j}"], out[f"s_d{j}"], out[f"is_f{j}"] = _sum_lane(
+                vals, w, gidv, n_groups, tag)
+        if "dec" in lanes:
+            out[f"s_dec{j}"] = _dec_lane(vals, w, gidv, n_groups, tag)
+        if "minmax" in lanes:
+            out[f"mn{j}"], out[f"mx{j}"] = _minmax_lane(
+                vals, gidv, n_groups, nv, tag, codec, ranked, out_t, is_dec)
+    if kept is not None and len(kept) < n_groups:
+        out = {k: (v.take(pa.array(kept)) if isinstance(v, pa.Array)
+                   else v[kept]) for k, v in out.items()}
+    out.update((f"g{i}", k) for i, k in enumerate(keys))
+    return out
+
+
+def _partials(spark: SparkSession, blocks_path: str, manifest_path: str,
+              predicates: list[Predicate], dims: list[str],
+              values: list[tuple[str, tuple]],
+              run_ids: list[str] | None = None,
+              meta: dict | None = None, counted: bool = True) -> DataFrame:
+    """The one partial stage: ``_block_partial`` over every surviving
+    block group of ``_scan`` in one ``mapInArrow`` -> (part_id,
+    g0..g{N-1} typed by the group columns, cnt, per value column j:
+    nv{j} and its lanes' columns), one row per (block, group present).
+    part_id rides along so incremental consumers
+    (streaming/agg_stream.py) can re-validate partials against the
+    manifest's valid pairs."""
+    if meta is None:
+        meta = manifestmod.table_meta(spark, manifest_path)
+    fields = _fields(meta)
+    cols = [(PART_ID, T.IntegerType(), pa.int32())]
+    dspec = []
+    for i, c in enumerate(dims):
+        dt = fields[c].dataType
+        dspec.append((c, _arrow_type(spark, dt), _is_bytes(dt)))
+        cols.append((f"g{i}", dt, dspec[-1][1]))
+    cols.append(("cnt", T.LongType(), pa.int64()))
+    vspec = []
+    for j, (c, lanes) in enumerate(values):
+        dt = fields[c].dataType
+        vspec.append((c, lanes, _arrow_type(spark, dt),
+                      isinstance(dt, T.DecimalType)))
+        cols.append((f"nv{j}", T.LongType(), pa.int64()))
+        if "sum" in lanes:
+            cols += [(f"s_l{j}", T.LongType(), pa.int64()),
+                     (f"s_d{j}", T.DoubleType(), pa.float64()),
+                     (f"is_f{j}", T.BooleanType(), pa.bool_())]
+        if "dec" in lanes:
+            cols.append((f"s_dec{j}", T.DecimalType(38, 0),
+                         pa.decimal128(38, 0)))
+        if "minmax" in lanes:
+            cols += [(f"mn{j}", dt, vspec[-1][2]), (f"mx{j}", dt, vspec[-1][2])]
+    names = [n for n, _s, _a in cols]
+    atypes = {n: a for n, _s, a in cols}
+    schema = T.StructType([T.StructField(n, s, True) for n, s, _a in cols])
+    need = list(dict.fromkeys(list(dims) + [c for c, _l in values]))
+
+    def arrow(a, t):
+        a = a if isinstance(a, pa.Array) else pa.array(a)
+        return a if a.type.equals(t) else a.cast(t)
+
+    def flush(acc):
+        return pa.RecordBatch.from_arrays(
+            [pa.concat_arrays([arrow(a, atypes[n]) for a in acc[n]])
+             for n in names], names=names)
+
+    def gen(batches):
+        acc, n_acc = {n: [] for n in names}, 0
+        for pid, n_rows, mask, blks in _groups(batches, predicates, need):
+            part = _block_partial(
+                n_rows, mask, [(blks[c], t, ib) for c, t, ib in dspec],
+                [(blks[c], lanes, t, dec) for c, lanes, t, dec in vspec],
+                counted)
+            k = len(part["cnt"])
+            part[PART_ID] = np.full(k, pid, dtype=np.int32)
+            for n in names:
+                acc[n].append(part[n])
+            n_acc += k
+            if n_acc >= 1 << 16:
+                yield flush(acc)
+                acc, n_acc = {n: [] for n in names}, 0
+        if n_acc:
+            yield flush(acc)
+
+    blocks = _scan(spark, blocks_path, manifest_path, need, predicates,
+                   run_ids=run_ids, meta=meta)
+    return blocks.mapInArrow(trimmed(gen), schema)
+
+
+_FOLD = {"cnt": F.sum, "nv": F.sum, "s_l": F.sum, "s_d": F.sum,
+         "s_dec": F.sum, "is_f": F.max, "mn": F.min, "mx": F.max}
+
+
+def _fold(partials: DataFrame) -> DataFrame:
+    """The one final fold: ``groupBy(g0..)`` (a global aggregate when
+    there is no dimension) with each lane column reduced by its own
+    rule — sums add, is_f ORs, min/max fold under Catalyst's own
+    F.min/F.max; with no lane left it is a DISTINCT over the dims.
+    Columns outside the lanes (part_id, run_id) drop."""
+    import re
+
+    dims = [c for c in partials.columns if re.fullmatch(r"g\d+", c)]
+    aggs = [_FOLD[c.rstrip("0123456789")](c).alias(c)
+            for c in partials.columns
+            if c.rstrip("0123456789") in _FOLD]
+    if not aggs:
+        return partials.select(*dims).distinct()
+    return partials.groupBy(*dims).agg(*aggs)
+
+
+def _sum_value(j: int):
+    """Value lane j's folded sum as a double (float partials carry
+    their integer-storage part in s_l)."""
+    return (F.when(F.col(f"is_f{j}"), F.col(f"s_d{j}") + F.col(f"s_l{j}"))
+            .otherwise(F.col(f"s_l{j}").cast("double")))
+
+
+def _dec_value(j: int, scale: int):
+    """Value lane j's exact decimal sum, rescaled in the decimal domain."""
+    divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
+    return (F.col(f"s_dec{j}") / divisor).cast(T.DecimalType(38, scale))
+
+
+def _counts(j: int) -> list:
+    """(n_rows, n_nulls) of a global fold, 0 when nothing survived."""
+    return [F.coalesce(F.col("cnt"), F.lit(0)).alias("n_rows"),
+            F.coalesce(F.col("cnt") - F.col(f"nv{j}"), F.lit(0))
+            .alias("n_nulls")]
+
+
+# ---------------------------------------------------------------------------
+# thin shapes over the core
+# ---------------------------------------------------------------------------
+
+
+def _aggregate(spark: SparkSession, blocks_path: str, manifest_path: str,
+               predicate, dims: list[str], values: list[tuple[str, tuple]],
+               run_ids: list[str] | None = None,
+               meta: dict | None = None) -> DataFrame:
+    """Partials + fold: the whole core for one aggregate."""
+    return _fold(_partials(spark, blocks_path, manifest_path,
+                           _normalize_predicates(predicate), dims, values,
+                           run_ids=run_ids, meta=meta))
+
+
+def _scale(dt) -> int | None:
+    """Decimal scale of a column type, None for every other type."""
+    return dt.scale if isinstance(dt, T.DecimalType) else None
+
+
+def _sum_lanes(dt) -> tuple:
+    return ("sum",) if _scale(dt) is None else ("dec",)
+
+
+def _sum_shape(folded: DataFrame, column: str, scale: int | None) -> DataFrame:
+    """Folded lane 0 -> the one-row column_sum result."""
+    total = _sum_value(0) if scale is None else _dec_value(0, scale)
+    return folded.select(F.lit(column).alias("column"),
+                         total.alias("sum_value"), *_counts(0))
 
 
 def column_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
                column: str, predicate=None,
                run_ids: list[str] | None = None) -> DataFrame:
     """One-row DataFrame (column, sum_value, n_rows, n_nulls) computed in
-    the compressed domain: each task reduces its blocks to one partial
-    row; Spark's final aggregation folds the partials (exact int64 for
-    integer storage, float64 for floats).  ``predicate`` (one or a list,
-    ANDed) restricts the aggregate to surviving rows — zone maps answer
-    all/none without opening blocks; partially-surviving groups reduce a
-    selective decode of only the surviving rows.
+    the compressed domain: each block reduces to one partial row (rle
+    over runs, dict over the code histogram); Spark's final aggregation
+    folds the partials (exact int64 for integer storage, float64 for
+    floats).  ``predicate`` (one or a list, ANDed) restricts the
+    aggregate to surviving rows — zone maps answer all/none without
+    opening blocks; partially-surviving groups reduce a selective
+    decode of only the surviving rows.
 
     Decimal columns sum EXACTLY in the unscaled-integer domain (int64
     low words for p<=18, (lo,hi) word-pair arithmetic in arbitrary-
     precision Python ints for the d128 storage) and return sum_value as
     decimal(38, s) — SQL SUM(decimal) semantics, no float rounding."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
-    tmeta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(tmeta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[column]
-    dec_scale = (field.dataType.scale
-                 if isinstance(field.dataType, T.DecimalType) else None)
-    if dec_scale is not None:
-        return _column_sum_decimal(spark, blocks_path, manifest_path, column,
-                                   predicates, dec_scale, run_ids=run_ids)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, meta=tmeta, run_ids=run_ids)
-    return _fold_sum(_sum_partials(blocks, predicates), column)
-
-
-def _sum_partials(blocks: DataFrame, predicates: list[Predicate]) -> DataFrame:
-    """Per-(task, part_id) partial sums over one projected blocks frame
-    -> (part_id, s_l, s_d, is_f, rows, nulls).  part_id rides along so
-    incremental consumers (streaming/agg_stream.py) can re-validate
-    partials against the manifest after compaction."""
-
-    def gen(batches):
-        acc: dict[int, list] = {}  # pid -> [s_l, s_d, is_f, rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                a = acc.setdefault(pids[i].as_py(), [0, 0.0, False, 0, 0])
-                b = blks[i]
-                g = grows[i].as_py()
-                if not b.is_valid:
-                    # evolved column: the group predates it — all rows NULL
-                    n_sel = g if isinstance(mask, str) else int(mask.sum())
-                    a[3] += n_sel
-                    a[4] += n_sel
-                    continue
-                if isinstance(mask, str):  # 'all'
-                    s, n_rows, n_valid = _block_sum(b.as_py())
-                else:
-                    s, n_rows, n_valid = _block_sum_masked(b.as_py(), mask)
-                if isinstance(s, float):
-                    a[2] = True
-                    a[1] += s
-                else:
-                    a[0] += s
-                a[3] += n_rows
-                a[4] += n_rows - n_valid
-        rows = [(pid, *v) for pid, v in acc.items() if v[3]]
-        if rows:
-            cols = list(zip(*rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.int32()),
-                 pa.array(cols[1], pa.int64()),
-                 pa.array(cols[2], pa.float64()),
-                 pa.array(cols[3], pa.bool_()),
-                 pa.array(cols[4], pa.int64()),
-                 pa.array(cols[5], pa.int64())],
-                names=[PART_ID, "s_l", "s_d", "is_f", "rows", "nulls"])
-
-    return blocks.mapInArrow(
-        trimmed(gen), f"{PART_ID} int, s_l long, s_d double, is_f boolean, "
-             "rows long, nulls long")
-
-
-def _fold_sum(partials: DataFrame, column: str) -> DataFrame:
-    """Fold (part_id, s_l, s_d, is_f, rows, nulls) partials into the
-    one-row column_sum result."""
-    return (partials.agg(
-        F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-        F.max("is_f").alias("is_f"), F.sum("rows").alias("n_rows"),
-        F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                F.when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-                .otherwise(F.col("s_l").cast("double")).alias("sum_value"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
+    meta = manifestmod.table_meta(spark, manifest_path)
+    dt = _fields(meta)[column].dataType
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate, [],
+                        [(column, _sum_lanes(dt))], run_ids, meta)
+    return _sum_shape(folded, column, _scale(dt))
 
 
 def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -369,220 +751,84 @@ def column_sums(spark: SparkSession, blocks_path: str, manifest_path: str,
     n_nulls).  Decimal columns fold exactly in the unscaled decimal
     domain and rescale at the end (use column_sum for a decimal(38,s)
     result type); bytes/list columns raise."""
-    import json as jsonmod
-
-    from decimal import Decimal
-
-    from pyspark.sql import types as T
-
     if not columns:
         raise ValueError("columns must be non-empty")
-    predicates = _normalize_predicates(predicate)
-    tmeta = manifestmod.table_meta(spark, manifest_path)
-    known = set(tmeta["columns"])
-    for c in list(columns) + _pred_cols(predicates):
-        if c not in known:
-            raise KeyError(f"unknown column {c}; encoded: {tmeta['columns']}")
-    schema = T.StructType.fromJson(jsonmod.loads(tmeta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
-    scales = {c: (fields[c].dataType.scale
-                  if isinstance(fields[c].dataType, T.DecimalType) else None)
-              for c in columns}
-
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
+    meta = manifestmod.table_meta(spark, manifest_path)
+    fields = _fields(meta)
     for c in columns:
-        proj.append(F.col("cols").getField(c).getField("block")
-                    .alias(f"__blkc_{c}"))
-    for pc_ in _pred_cols(predicates):
-        proj.append(F.col("cols").getField(pc_).getField("block")
-                    .alias(f"__blk_{pc_}"))
-        proj.append(F.col("cols").getField(pc_).getField("stats")
-                    .alias(f"__st_{pc_}"))
-    blocks = (schema_read_blocks(spark, blocks_path, tmeta["columns"])
-              .select(*proj))
-    keeps = [k for k in (p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-                         for p in predicates) if k is not None]
-    for k in keeps:
-        blocks = blocks.filter(k)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    blocks = blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-
-    out_schema = T.StructType([
-        T.StructField("column", T.StringType(), False),
-        T.StructField("s_l", T.LongType(), False),
-        T.StructField("s_d", T.DoubleType(), False),
-        T.StructField("is_f", T.BooleanType(), False),
-        T.StructField("s_dec", T.DecimalType(38, 0), True),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("nulls", T.LongType(), False),
-    ])
-    col_list = list(columns)
-
-    def gen(batches):
-        # per-column accumulators across the task's batches
-        acc = {c: [0, 0.0, False, 0, 0, 0] for c in col_list}
-        #        [s_l, s_d, is_f, s_dec, rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            grows = batch.column(names.index("n_rows"))
-            cblks = {c: batch.column(names.index(f"__blkc_{c}"))
-                     for c in col_list}
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                g = grows[i].as_py()
-                n_sel_evolved = g if isinstance(mask, str) else int(mask.sum())
-                for c in col_list:
-                    a = acc[c]
-                    b = cblks[c][i]
-                    if not b.is_valid:
-                        a[4] += n_sel_evolved
-                        a[5] += n_sel_evolved
-                        continue
-                    if scales[c] is not None:
-                        s, n_rows, n_valid = _block_sum_dec(b.as_py(), mask)
-                        a[3] += s
-                    else:
-                        if isinstance(mask, str):
-                            s, n_rows, n_valid = _block_sum(b.as_py())
-                        else:
-                            s, n_rows, n_valid = _block_sum_masked(
-                                b.as_py(), mask)
-                        if isinstance(s, float):
-                            a[2] = True
-                            a[1] += s
-                        else:
-                            a[0] += s
-                    a[4] += n_rows
-                    a[5] += n_rows - n_valid
-        rows = [(c, a[0], a[1], a[2], Decimal(a[3]), a[4], a[5])
-                for c, a in acc.items() if a[4]]
-        if rows:
-            cols = list(zip(*rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.string()),
-                 pa.array(cols[1], pa.int64()),
-                 pa.array(cols[2], pa.float64()),
-                 pa.array(cols[3], pa.bool_()),
-                 pa.array(cols[4], pa.decimal128(38, 0)),
-                 pa.array(cols[5], pa.int64()),
-                 pa.array(cols[6], pa.int64())],
-                names=["column", "s_l", "s_d", "is_f", "s_dec",
-                       "rows", "nulls"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    agg = partials.groupBy("column").agg(
-        F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-        F.max("is_f").alias("is_f"), F.sum("s_dec").alias("s_dec"),
-        F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
-    # per-column decimal scale: map literal column -> 10^scale (double)
-    dec_cols = [c for c, s in scales.items() if s is not None]
-    scale_map = F.create_map(*[x for c in dec_cols
-                               for x in (F.lit(c),
-                                         F.lit(float(10 ** scales[c])))]) \
-        if dec_cols else None
-    sum_col = (F.when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-               .otherwise(F.col("s_l").cast("double")))
-    if scale_map is not None:
-        sum_col = (F.when(F.col("column").isin(dec_cols),
-                          F.col("s_dec").cast("double")
-                          / scale_map[F.col("column")])
-                   .otherwise(sum_col))
-    return agg.select("column", sum_col.alias("sum_value"),
-                      "n_rows", "n_nulls")
+        if c not in fields:
+            raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
+    dts = [fields[c].dataType for c in columns]
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate, [],
+                        [(c, _sum_lanes(dt)) for c, dt in zip(columns, dts)],
+                        meta=meta)
+    rows = [F.struct(
+        F.lit(c).alias("column"),
+        (F.col(f"s_dec{j}").cast("double") / F.lit(float(10 ** dt.scale))
+         if isinstance(dt, T.DecimalType) else _sum_value(j))
+        .alias("sum_value"),
+        F.col("cnt").alias("n_rows"),
+        (F.col("cnt") - F.col(f"nv{j}")).alias("n_nulls"))
+        for j, (c, dt) in enumerate(zip(columns, dts))]
+    return (folded.select(F.explode(F.array(*rows)).alias("r"))
+            .select("r.*").where(F.col("n_rows").isNotNull()))
 
 
-def _column_sum_decimal(spark: SparkSession, blocks_path: str,
-                        manifest_path: str, column: str,
-                        predicates: list[Predicate], scale: int,
-                        run_ids: list[str] | None = None) -> DataFrame:
-    """column_sum for decimal storage: per-task exact unscaled sums ride
-    as decimal(38,0) partials (arbitrary-precision in Python, loud
-    overflow past 38 digits at the Arrow boundary — never silent), the
-    final fold divides by 10^scale in the decimal domain."""
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, run_ids=run_ids)
-    return _fold_sum_dec(_sum_dec_partials(blocks, predicates), column, scale)
+def column_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
+               column: str, predicate=None,
+               run_ids: list[str] | None = None) -> DataFrame:
+    """AVG(``column``) in the compressed domain with SQL null semantics:
+    nulls leave both the numerator and the denominator (AVG over an
+    all-null selection is NULL, never 0/0).  Built on ``column_sum``, so
+    the shuffle shape is identical.  Decimal columns sum exactly in the
+    unscaled domain first and divide once at the end (the quotient
+    itself is a float64 — consumers that need digit-exact division
+    should divide ``column_sum`` themselves).  Returns one row:
+    (column, avg_value double, n_rows, n_nulls)."""
+    s = column_sum(spark, blocks_path, manifest_path, column,
+                   predicate=predicate, run_ids=run_ids)
+    n_valid = F.col("n_rows") - F.col("n_nulls")
+    return s.select(
+        "column",
+        F.when(n_valid == 0, F.lit(None).cast("double"))
+        .otherwise(F.col("sum_value").cast("double") / n_valid)
+        .alias("avg_value"),
+        "n_rows", "n_nulls")
 
 
-def _sum_dec_partials(blocks: DataFrame,
-                      predicates: list[Predicate]) -> DataFrame:
-    """Per-(task, part_id) exact unscaled decimal partials over one
-    projected blocks frame -> (part_id, s_dec, rows, nulls).  part_id
-    rides along so incremental consumers (streaming/agg_stream.py) can
-    re-validate partials against the manifest — the decimal analog of
-    ``_sum_partials``."""
-    from decimal import Decimal
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField(PART_ID, T.IntegerType(), False),
-        T.StructField("s_dec", T.DecimalType(38, 0), True),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("nulls", T.LongType(), False),
-    ])
-
-    def gen(batches):
-        acc: dict[int, list] = {}  # pid -> [s_int, rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                a = acc.setdefault(pids[i].as_py(), [0, 0, 0])
-                b = blks[i]
-                if not b.is_valid:
-                    n_sel = (grows[i].as_py() if isinstance(mask, str)
-                             else int(mask.sum()))
-                    a[1] += n_sel
-                    a[2] += n_sel
-                    continue
-                s, n_rows, n_valid = _block_sum_dec(b.as_py(), mask)
-                a[0] += s
-                a[1] += n_rows
-                a[2] += n_rows - n_valid
-        rows = [(pid, *v) for pid, v in acc.items() if v[1]]
-        if rows:
-            cols = list(zip(*rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.int32()),
-                 pa.array([Decimal(int(s)) for s in cols[1]],
-                          pa.decimal128(38, 0)),
-                 pa.array(cols[2], pa.int64()),
-                 pa.array(cols[3], pa.int64())],
-                names=[PART_ID, "s_dec", "rows", "nulls"])
-
-    return blocks.mapInArrow(trimmed(gen), out_schema)
+def column_count(spark: SparkSession, blocks_path: str, manifest_path: str,
+                 column: str, predicate=None,
+                 run_ids: list[str] | None = None) -> DataFrame:
+    """COUNT(``column``) / COUNT(*) in the compressed domain: the core
+    runs with no value lane, so each block reads only its VALIDITY
+    bitmap (values are never decoded) and the operator works for every
+    tag — including byte/list columns that ``column_sum`` refuses.
+    Under a predicate, partially-surviving blocks count
+    ``validity[mask]``.  Returns one row:
+    (column, n_values, n_rows, n_nulls) where n_values = COUNT(column)
+    and n_rows = COUNT(*) of the surviving selection."""
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate, [],
+                        [(column, ())], run_ids)
+    n_rows, n_nulls = _counts(0)
+    return folded.select(F.lit(column).alias("column"),
+                         (n_rows - n_nulls).alias("n_values"),
+                         n_rows, n_nulls)
 
 
-def _fold_sum_dec(partials: DataFrame, column: str, scale: int) -> DataFrame:
-    """Fold (part_id, s_dec, rows, nulls) partials into the one-row
-    column_sum result for decimal storage (decimal-domain rescale)."""
-    from pyspark.sql import types as T
-
-    divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
-    return (partials.agg(
-        F.sum("s_dec").alias("s_dec"), F.sum("rows").alias("n_rows"),
-        F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                (F.col("s_dec") / divisor)
-                .cast(T.DecimalType(38, scale)).alias("sum_value"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
+def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
+                  column: str, predicate=None,
+                  run_ids: list[str] | None = None) -> DataFrame:
+    """One-row (column, vmin, vmax, n_rows, n_nulls), value-exact and
+    predicate-aware — the companion to stats.zone_minmax (which reads
+    only float64 zone leaves and can't filter).  Sorted dictionaries
+    answer min/max in O(1); the result is typed by the table schema, so
+    int64 beyond 2^53, byte strings and decimals (d128 included) stay
+    exact."""
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate, [],
+                        [(column, ("minmax",))], run_ids)
+    return folded.select(F.lit(column).alias("column"),
+                         F.col("mn0").alias("vmin"),
+                         F.col("mx0").alias("vmax"), *_counts(0))
 
 
 def value_counts(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -595,131 +841,37 @@ def value_counts(spark: SparkSession, blocks_path: str, manifest_path: str,
     NULL group row is emitted when the column has nulls (SQL GROUP BY
     semantics).  ``predicate`` restricts counting to surviving rows.
     Returns (value, cnt); value typed by the table schema."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[column]
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, meta=meta, run_ids=run_ids)
-    partials = _vc_partials(spark, blocks, predicates, field.dataType)
-    return (partials.groupBy("value").agg(F.sum("cnt").alias("cnt")))
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate,
+                        [column], [], run_ids)
+    return folded.select(F.col("g0").alias("value"), "cnt")
 
 
-def _vc_partials(spark: SparkSession, blocks: DataFrame,
-                 predicates: list[Predicate], value_type) -> DataFrame:
-    """Per-block (part_id, value, cnt) partial histograms over one
-    projected blocks frame; fold with groupBy(value).sum(cnt)."""
-    from pyspark.sql import types as T
-
-    is_bytes = value_type.typeName() in ("string", "binary")
-    out_schema = T.StructType([
-        T.StructField(PART_ID, T.IntegerType(), False),
-        T.StructField("value", value_type, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(value_type, tz)
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                b = blks[i]
-                pid = pids[i].as_py()
-                if not b.is_valid:
-                    # evolved column: every surviving row is the NULL value
-                    g = (grows[i].as_py() if isinstance(mask, str)
-                         else int(mask.sum()))
-                    if g:
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array([pid], pa.int32()),
-                             pa.nulls(1, out_t), pa.array([g], pa.int64())],
-                            names=[PART_ID, "value", "cnt"])
-                    continue
-                if isinstance(mask, str):  # 'all'
-                    u, cnt, n_null = _block_value_counts(b.as_py())
-                else:
-                    u, cnt, n_null = _block_value_counts_masked(b.as_py(), mask)
-                varr = strings.to_arrow(u) if is_bytes else pa.array(np.asarray(u))
-                if not varr.type.equals(out_t):
-                    varr = varr.cast(out_t)
-                carr = pa.array(cnt, pa.int64())
-                if n_null:
-                    varr = pa.concat_arrays([varr.cast(out_t), pa.nulls(1, out_t)])
-                    carr = pa.concat_arrays([carr, pa.array([n_null], pa.int64())])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(varr), pid, dtype=np.int32)),
-                     varr, carr],
-                    names=[PART_ID, "value", "cnt"])
-
-    return blocks.mapInArrow(trimmed(gen), out_schema)
+def column_distinct(spark: SparkSession, blocks_path: str,
+                    manifest_path: str, column: str,
+                    predicate=None,
+                    run_ids: list[str] | None = None) -> DataFrame:
+    """DISTINCT values of ``column`` (NULL excluded, SQL COUNT(DISTINCT)
+    semantics): the ``value_counts`` core run uncounted, so dict blocks
+    contribute their dictionary without decoding the code stream and
+    only per-block distinct sets cross the shuffle — a 100 TB low-
+    cardinality column folds to n_blocks x n_distinct tiny rows.
+    Returns one column ``value``; count() it for COUNT(DISTINCT)."""
+    partials = _partials(spark, blocks_path, manifest_path,
+                         _normalize_predicates(predicate), [column], [],
+                         run_ids=run_ids, counted=False)
+    partials = partials.where(F.col("g0").isNotNull()).select("g0")
+    return _fold(partials).select(F.col("g0").alias("value"))
 
 
-def _group_codes(blk: bytes):
-    """Full-length integer group labels for one block -> (uniques,
-    codes_full, validity_bits_spent).  ``codes_full`` has one entry per
-    ROW (length n_rows); null rows carry code -1.  Dict blocks hand
-    their code stream over directly (the group column's strings are
-    never materialized); rle blocks label runs without expansion of the
-    values; everything else decodes dense and dictionary-encodes."""
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    if tag == "d128" or tag in lists.LIST_TAGS:
-        raise TypeError(f"group-by over tag {tag!r} is not defined")
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    if codec == "dict":
-        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
-        codes = codes.astype(np.int64)
-    elif codec == "rle" and tag != "bytes":
-        rv, rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        uniques, inv = np.unique(np.asarray(rv), return_inverse=True)
-        codes = np.repeat(inv.astype(np.int64), rl.astype(np.int64))
-    else:
-        values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-        if tag == "bytes":
-            # per-block unique order is irrelevant: the final groupBy
-            # merges partials by value
-            de = strings.to_arrow(values).dictionary_encode()
-            uniques = strings.from_arrow(de.dictionary)
-            codes = np.asarray(de.indices).astype(np.int64)
-        else:
-            uniques, inv = np.unique(np.asarray(values), return_inverse=True)
-            codes = inv.astype(np.int64)
-    if validity is None:
-        return uniques, codes
-    full = np.full(n_rows, -1, dtype=np.int64)
-    full[validity] = codes
-    return uniques, full
-
-
-def _dense_full(blk: bytes):
-    """Numeric block -> (values_full, valid_mask_full).  ``values_full``
-    is full block length with garbage (zero) in null slots; mask them
-    with ``valid_mask_full``."""
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    _check_sum_tag(tag)
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    v = np.asarray(blockmod.decode_values(payload, meta, n_valid, tag, codec))
-    if validity is None:
-        return v, np.ones(n_rows, dtype=bool)
-    full = np.zeros(n_rows, dtype=v.dtype)
-    full[validity] = v
-    return full, validity.astype(bool)
+def _gsum_shape(folded: DataFrame, scale: int | None) -> DataFrame:
+    """Folded (g0, lane 0) -> the (value, sum_value, cnt) grouped_sum
+    result with SQL null semantics (an all-null group sums NULL)."""
+    total, null_t = ((_sum_value(0), "double") if scale is None
+                     else (_dec_value(0, scale), T.DecimalType(38, scale)))
+    return folded.select(
+        F.col("g0").alias("value"),
+        F.when(F.col("nv0") == 0, F.lit(None).cast(null_t))
+        .otherwise(total).alias("sum_value"), "cnt")
 
 
 def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -728,599 +880,228 @@ def grouped_sum(spark: SparkSession, blocks_path: str, manifest_path: str,
     """GROUP BY ``group_column`` -> SUM(``value_column``), COUNT(*) in
     the compressed domain.  The WIDE blocks layout aligns both columns
     inside one parquet row (same group = same rows, same order), so each
-    task reduces a block pair to at most n_distinct partial rows with
+    block reduces a block pair to at most n_distinct partial rows with
     ``np.bincount`` — a dict-coded group column never materializes its
     strings, the code stream IS the group id.  SQL semantics: NULL
     groups aggregate into a NULL-value row; NULL values count rows but
     contribute nothing to the sum (an all-null group sums to NULL).
-    ``predicate`` restricts the aggregate with the decoder's zone/mask
-    cascade.  Returns (value, sum_value, cnt) with value typed by the
-    table schema; only per-block distinct groups cross the final
-    shuffle."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
+    Decimal values sum exactly in unscaled partials (sum_value
+    decimal(38,s), digit-exact).  ``predicate`` restricts the aggregate
+    with the decoder's zone/mask cascade.  Returns (value, sum_value,
+    cnt) with value typed by the table schema; only per-block distinct
+    groups cross the final shuffle."""
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
-    field = fields[group_column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    dec_scale = (fields[value_column].dataType.scale
-                 if isinstance(fields[value_column].dataType, T.DecimalType)
-                 else None)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, group_column,
-                          predicates, value_column=value_column, meta=meta,
-                          run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-    if dec_scale is not None:
-        return _grouped_sum_decimal(blocks, predicates, field.dataType,
-                                    out_t, is_bytes, dec_scale)
-    partials = _gsum_partials(blocks, predicates, field.dataType, out_t,
-                              is_bytes)
-    return _fold_gsum(partials)
+    dt = _fields(meta)[value_column].dataType
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate,
+                        [group_column], [(value_column, _sum_lanes(dt))],
+                        run_ids, meta)
+    return _gsum_shape(folded, _scale(dt))
 
 
-def _gsum_partials(blocks: DataFrame, predicates: list[Predicate],
-                   group_type, out_t, is_bytes: bool) -> DataFrame:
-    """Per-(block, group) grouped-sum partials -> (part_id, value, cnt,
-    nv, s_l, s_d, is_f).  part_id rides along so incremental consumers
-    (streaming/agg_stream.py) can re-validate partials against the
-    manifest's live pairs."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField(PART_ID, T.IntegerType(), False),
-        T.StructField("value", group_type, True),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("nv", T.LongType(), False),
-        T.StructField("s_l", T.LongType(), False),
-        T.StructField("s_d", T.DoubleType(), False),
-        T.StructField("is_f", T.BooleanType(), False),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:
-                    # evolved group column: every row is the NULL group
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                if vb.is_valid:
-                    vfull, vmask = _dense_full(vb.as_py())
-                else:
-                    # evolved value column: all values NULL
-                    vfull = np.zeros(n_rows, dtype=np.int64)
-                    vmask = np.zeros(n_rows, dtype=bool)
-                sel = (np.ones(len(gfull), dtype=bool)
-                       if isinstance(mask, str) else mask)
-                nu = len(uniq) if uniq is not None else 0
-                g1 = gfull + 1  # slot 0 = NULL group
-                cnt = np.bincount(g1[sel], minlength=nu + 1)
-                wv = vmask & sel
-                nv = np.bincount(g1[wv], minlength=nu + 1)
-                if vfull.dtype.kind == "f":
-                    is_f = True
-                    s_d = np.bincount(g1[wv], weights=vfull[wv],
-                                      minlength=nu + 1)
-                    s_l = np.zeros(nu + 1, dtype=np.int64)
-                else:
-                    is_f = False
-                    s_l = np.zeros(nu + 1, dtype=np.int64)
-                    np.add.at(s_l, g1[wv], vfull[wv].astype(np.int64))
-                    s_d = np.zeros(nu + 1, dtype=np.float64)
-                keep = cnt > 0
-                if not keep.any():
-                    continue
-                kept_idx = np.nonzero(keep[1:])[0]
-                if uniq is not None and len(kept_idx):
-                    varr = (strings.to_arrow(uniq) if is_bytes
-                            else pa.array(np.asarray(uniq)))
-                    if not varr.type.equals(out_t):
-                        varr = varr.cast(out_t)
-                    if len(kept_idx) < len(varr):
-                        varr = varr.take(pa.array(kept_idx))
-                else:
-                    varr = pa.nulls(0, out_t)
-                if keep[0]:
-                    varr = pa.concat_arrays([pa.nulls(1, out_t), varr])
-                cnt, nv = cnt[keep], nv[keep]
-                s_l, s_d = s_l[keep], s_d[keep]
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(cnt), pids[i].as_py(), np.int32),
-                              pa.int32()),
-                     varr,
-                     pa.array(cnt.astype(np.int64), pa.int64()),
-                     pa.array(nv.astype(np.int64), pa.int64()),
-                     pa.array(s_l, pa.int64()),
-                     pa.array(s_d, pa.float64()),
-                     pa.array(np.full(len(cnt), is_f), pa.bool_())],
-                    names=[PART_ID, "value", "cnt", "nv", "s_l", "s_d",
-                           "is_f"])
-
-    return blocks.mapInArrow(trimmed(gen), out_schema)
+def grouped_sum_multi(spark: SparkSession, blocks_path: str,
+                      manifest_path: str, group_columns,
+                      value_column: str, predicate=None,
+                      run_ids: list[str] | None = None) -> DataFrame:
+    """GROUP BY (c1, ..., cN) -> SUM(``value_column``), COUNT(*) in the
+    compressed domain — the (lang, repo) / (flag, status) rollup shape.
+    N == 1 delegates to ``grouped_sum`` (which also handles decimal
+    values exactly); N >= 2 is ``grouped_aggs`` with one value column
+    (single composite-coded pass), renamed to the stable
+    (g1..gN, sum_value, cnt) shape.  Decimal value columns are not
+    supported for N >= 2 — use single-column ``grouped_sum`` (exact
+    decimal partials) or ``column_sum`` per group."""
+    gcols = [str(c) for c in group_columns]
+    if not gcols:
+        raise ValueError("group_columns must be non-empty")
+    if len(set(gcols)) != len(gcols):
+        raise ValueError(f"duplicate group columns {gcols}")
+    if len(gcols) == 1:
+        return (grouped_sum(spark, blocks_path, manifest_path, gcols[0],
+                            value_column, predicate=predicate,
+                            run_ids=run_ids)
+                .withColumnRenamed("value", gcols[0]))
+    meta = manifestmod.table_meta(spark, manifest_path)
+    if isinstance(_fields(meta)[value_column].dataType, T.DecimalType):
+        raise NotImplementedError(
+            "grouped_sum_multi over decimal values is not supported; "
+            "use grouped_sum (exact decimal) per group column")
+    out = grouped_aggs(spark, blocks_path, manifest_path, gcols,
+                       [value_column], predicate=predicate, run_ids=run_ids)
+    return out.select(
+        *gcols, F.col(f"sum_{value_column}").alias("sum_value"), "cnt")
 
 
-def _fold_gsum(partials: DataFrame) -> DataFrame:
-    """Fold grouped-sum partials into the (value, sum_value, cnt)
-    result with SQL null semantics (all-null group sums NULL)."""
-    agg = partials.groupBy("value").agg(
-        F.sum("cnt").alias("cnt"), F.sum("nv").alias("nv"),
-        F.sum("s_l").alias("s_l"), F.sum("s_d").alias("s_d"),
-        F.max("is_f").alias("is_f"))
-    return agg.select(
-        "value",
-        F.when(F.col("nv") == 0, F.lit(None).cast("double"))
-        .when(F.col("is_f"), F.col("s_d") + F.col("s_l"))
-        .otherwise(F.col("s_l").cast("double")).alias("sum_value"),
+def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
+                 group_columns, value_columns, predicate=None,
+                 run_ids: list[str] | None = None,
+                 minmax: bool = False) -> DataFrame:
+    """GROUP BY (g1..gN) -> SUM / AVG / COUNT of EACH of (v1..vM) plus
+    COUNT(*), all in ONE pass over the blocks parquet — the full TPC-H
+    Q1 rollup shape.  The wide layout aligns every group leaf and every
+    value leaf inside one parquet row, so each block joint-codes the
+    group streams once (mixed-radix composite, memory scales with the
+    combinations PRESENT in the block) and reduces all M value columns
+    against the same composite codes; one partial row per (block,
+    combination) crosses the shuffle regardless of row count.
+
+    SQL semantics per dimension/value: NULL group keys form their own
+    row; NULL values count toward cnt but not toward sum/avg/n_<v>
+    (an all-null (group, value) pair sums/averages NULL).  Decimal
+    value columns are not supported here (use grouped_sum per column:
+    exact unscaled partials).  Returns one column per group dimension,
+    then per value column v: sum_<v> (double), avg_<v> (double),
+    n_<v> (valid-value count), and finally cnt.  ``minmax=True`` adds
+    min_<v>/max_<v>, TYPED by the value column (partials carry the
+    column's own type and fold under Catalyst F.min/F.max, so int64
+    beyond 2^53 never rounds through the double sum lanes)."""
+    gcols = [str(c) for c in group_columns]
+    vcols = [str(c) for c in value_columns]
+    if not gcols or not vcols:
+        raise ValueError("group_columns and value_columns must be non-empty")
+    if len(set(gcols)) != len(gcols) or len(set(vcols)) != len(vcols):
+        raise ValueError("duplicate columns in group/value lists")
+    meta = manifestmod.table_meta(spark, manifest_path)
+    fields = _fields(meta)
+    for v in vcols:
+        if isinstance(fields[v].dataType, T.DecimalType):
+            raise NotImplementedError(
+                f"grouped_aggs over decimal column {v!r} is not supported; "
+                "use grouped_sum (exact decimal partials) per column")
+    lanes = ("sum", "minmax") if minmax else ("sum",)
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate, gcols,
+                        [(v, lanes) for v in vcols], run_ids, meta)
+    outs = [F.col(f"g{i}").alias(c) for i, c in enumerate(gcols)]
+    for j, v in enumerate(vcols):
+        nv = F.col(f"nv{j}")
+        s = F.when(nv == 0, F.lit(None).cast("double")).otherwise(_sum_value(j))
+        outs += [s.alias(f"sum_{v}"), (s / nv).alias(f"avg_{v}"),
+                 nv.alias(f"n_{v}")]
+        if minmax:
+            outs += [F.col(f"mn{j}").alias(f"min_{v}"),
+                     F.col(f"mx{j}").alias(f"max_{v}")]
+    outs.append(F.col("cnt"))
+    return folded.select(*outs)
+
+
+def grouped_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
+                group_column: str, value_column: str, predicate=None,
+                run_ids: list[str] | None = None) -> DataFrame:
+    """GROUP BY ``group_column`` -> AVG(``value_column``) with SQL null
+    semantics (NULL values excluded; all-null group averages NULL).
+    Thin shape over ``grouped_aggs``: (value, avg_value, n_values,
+    cnt)."""
+    out = grouped_aggs(spark, blocks_path, manifest_path, [group_column],
+                       [value_column], predicate=predicate, run_ids=run_ids)
+    return out.select(
+        F.col(group_column).alias("value"),
+        F.col(f"avg_{value_column}").alias("avg_value"),
+        F.col(f"n_{value_column}").alias("n_values"),
         "cnt")
 
 
-def _dense_full_dec(blk: bytes):
-    """Decimal value block -> (unscaled Python-int object array of full
-    block length, valid_mask_full).  int64 low-word storage widens to
-    Python int; d128 word pairs combine hi*2^64 + lo_u — both exact."""
-    payload, validity, meta, tag, codec, n_rows = blockmod.open_block(blk)
-    n_valid = int(validity.sum()) if validity is not None else n_rows
-    v = np.asarray(blockmod.decode_values(payload, meta, n_valid, tag, codec))
-    if tag == "d128":
-        vals = ((v[:, 1].astype(object) << 64)
-                + v[:, 0].astype(np.uint64).astype(object))
-    elif tag in ("bytes",) or tag in lists.LIST_TAGS:
-        raise TypeError(f"decimal sum over tag {tag!r} is not defined")
-    else:
-        vals = v.astype(object)
-    full = np.zeros(n_rows, dtype=object)
-    if validity is None:
-        return vals if len(vals) == n_rows else full, \
-            np.ones(n_rows, dtype=bool)
-    full[validity] = vals
-    return full, validity.astype(bool)
+def grouped_minmax(spark: SparkSession, blocks_path: str,
+                   manifest_path: str, group_column: str,
+                   value_column: str, predicate=None,
+                   run_ids: list[str] | None = None) -> DataFrame:
+    """GROUP BY ``group_column`` -> MIN/MAX(``value_column``), COUNT(*)
+    in the compressed domain, value-exact: partials are emitted TYPED
+    (int64 beyond 2^53, byte strings, decimals, timestamps never round
+    through float64) and fold under Catalyst's own F.min/F.max, so one
+    row per (block, group) crosses the shuffle.  Byte values reduce as
+    dictionary RANKS (sorted dict blocks: the code stream IS the rank;
+    other codecs rank once per block distinct via sort_indices), never
+    comparing strings row-by-row.  SQL semantics: NULL group keys form
+    their own row; NULL values never rank (an all-null group's min/max
+    is NULL).  decimal(p<=18) reduces unscaled; d128 and list tags
+    raise.  Returns (value, min_value, max_value, cnt)."""
+    meta = manifestmod.table_meta(spark, manifest_path)
+    vdt = _fields(meta)[value_column].dataType
+    if isinstance(vdt, T.DecimalType) and vdt.precision > 18:
+        raise NotImplementedError(
+            "grouped_minmax over decimal(p>18) d128 columns is not "
+            "supported; use column_minmax per group or precision <= 18")
+    folded = _aggregate(spark, blocks_path, manifest_path, predicate,
+                        [group_column], [(value_column, ("minmax",))],
+                        run_ids, meta)
+    return folded.select(F.col("g0").alias("value"),
+                         F.col("mn0").alias("min_value"),
+                         F.col("mx0").alias("max_value"), "cnt")
 
 
-def _grouped_sum_decimal(blocks: DataFrame, predicates: list[Predicate],
-                         group_type, out_t, is_bytes: bool,
-                         scale: int) -> DataFrame:
-    """grouped_sum for decimal value columns: per-group exact unscaled
-    sums in arbitrary-precision Python ints, decimal(38,0) partials,
-    decimal-domain rescale — sum_value decimal(38,s), digit-exact."""
-    from decimal import Decimal
-
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("value", group_type, True),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("nv", T.LongType(), False),
-        T.StructField("s_dec", T.DecimalType(38, 0), True),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                if vb.is_valid:
-                    vfull, vmask = _dense_full_dec(vb.as_py())
-                else:
-                    vfull = np.zeros(n_rows, dtype=object)
-                    vmask = np.zeros(n_rows, dtype=bool)
-                sel = (np.ones(len(gfull), dtype=bool)
-                       if isinstance(mask, str) else mask)
-                nu = len(uniq) if uniq is not None else 0
-                g1 = gfull + 1  # slot 0 = NULL group
-                cnt = np.bincount(g1[sel], minlength=nu + 1)
-                wv = vmask & sel
-                nv = np.bincount(g1[wv], minlength=nu + 1)
-                s = np.zeros(nu + 1, dtype=object)
-                np.add.at(s, g1[wv], vfull[wv])
-                keep = cnt > 0
-                if not keep.any():
-                    continue
-                kept_idx = np.nonzero(keep[1:])[0]
-                if uniq is not None and len(kept_idx):
-                    varr = (strings.to_arrow(uniq) if is_bytes
-                            else pa.array(np.asarray(uniq)))
-                    if not varr.type.equals(out_t):
-                        varr = varr.cast(out_t)
-                    if len(kept_idx) < len(varr):
-                        varr = varr.take(pa.array(kept_idx))
-                else:
-                    varr = pa.nulls(0, out_t)
-                if keep[0]:
-                    varr = pa.concat_arrays([pa.nulls(1, out_t), varr])
-                cnt, nv, s = cnt[keep], nv[keep], s[keep]
-                yield pa.RecordBatch.from_arrays(
-                    [varr,
-                     pa.array(cnt.astype(np.int64), pa.int64()),
-                     pa.array(nv.astype(np.int64), pa.int64()),
-                     pa.array([Decimal(int(x)) for x in s],
-                              pa.decimal128(38, 0))],
-                    names=["value", "cnt", "nv", "s_dec"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    agg = partials.groupBy("value").agg(
-        F.sum("cnt").alias("cnt"), F.sum("nv").alias("nv"),
-        F.sum("s_dec").alias("s_dec"))
-    divisor = F.lit(10 ** scale).cast(T.DecimalType(scale + 1, 0))
-    return agg.select(
-        "value",
-        F.when(F.col("nv") == 0,
-               F.lit(None).cast(T.DecimalType(38, scale)))
-        .otherwise((F.col("s_dec") / divisor)
-                   .cast(T.DecimalType(38, scale))).alias("sum_value"),
-        "cnt")
+# ---------------------------------------------------------------------------
+# sketch operators: their own lanes over the same _groups
+# ---------------------------------------------------------------------------
 
 
-def _d128_minmax(pairs: np.ndarray) -> tuple[int, int]:
-    """(min, max) of (lo, hi) int64 word pairs as exact Python ints —
-    signed-128 order = lexicographic (hi signed, lo unsigned)."""
-    lo_u = pairs[:, 0].astype(np.uint64)
-    hi = pairs[:, 1]
-    order = np.lexsort((lo_u, hi))
-    i, j = int(order[0]), int(order[-1])
-
-    def val(k: int) -> int:
-        return (int(hi[k]) << 64) + int(lo_u[k])
-
-    return val(i), val(j)
-
-
-def _dec_scalar_arr(unscaled, out_t: "pa.DataType"):
-    """One unscaled int (or None) -> 1-element arrow decimal array."""
-    import decimal as dec
-
-    if unscaled is None:
-        return pa.nulls(1, out_t)
-    v = dec.Decimal(int(unscaled)).scaleb(-out_t.scale)
-    return pa.array([v], out_t)
+def _segments(slots: np.ndarray, values: np.ndarray):
+    """(slot, values of that slot) for each slot present, ascending —
+    one vectorized sketch update per group segment."""
+    if not len(slots):
+        return
+    order = np.argsort(slots, kind="stable")
+    s, v = slots[order], values[order]
+    bounds = np.nonzero(np.diff(s))[0] + 1
+    for a, b in zip(np.concatenate(([0], bounds)),
+                    np.concatenate((bounds, [len(s)]))):
+        yield int(s[a]), v[a:b]
 
 
-def _dec_arr(unscaled_ints, out_t: "pa.DataType"):
-    """Vector of unscaled ints (python ints / int64s, None allowed) ->
-    arrow decimal array.  Per-element Decimal construction — callers
-    only pass aggregate RESULTS (<= k per block / one per group), never
-    row streams."""
-    import decimal as dec
+def _hash_values(vals, tag: str) -> np.ndarray:
+    """HLL hashes of decoded values; byte values dedupe through Arrow
+    BEFORE the per-string hash."""
+    from ..kernels import hll
 
-    py = [None if x is None else dec.Decimal(int(x)).scaleb(-out_t.scale)
-          for x in unscaled_ints]
-    return pa.array(py, out_t)
+    if tag == "bytes":
+        return hll.hash_bytes(strings.to_arrow(vals).unique().to_pylist())
+    return hll.hash_fixed(np.asarray(vals))
 
 
-def _block_minmax(blk: bytes):
-    """(vmin, vmax, n_rows, n_valid) for one block, value-exact (unlike
-    the float64 zone stats): sorted dict blocks answer in O(1) from the
-    dictionary's head/tail; rle blocks reduce run values (O(runs));
-    everything else decodes dense.  Returns numpy scalars / bytes;
-    d128 blocks return exact Python ints (unscaled)."""
+def _block_hashes(blk, n_rows: int, mask):
+    """(hashes | None, n_sel, n_valid) of one block for a HyperLogLog:
+    dict blocks hash only their dictionary (the code stream is never
+    touched), rle blocks their run values."""
+    from ..kernels import hll
+
+    if blk is None:  # evolved column: all NULL here, nothing to sketch
+        return None, _n_sel(n_rows, mask), 0
+    if mask is not None:
+        vals, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
+        _require(tag, "approx distinct")
+        return (_hash_values(vals, tag) if len(vals) else None), n_sel, len(vals)
     payload, meta, tag, codec, n_rows, n_valid = _open_dense(blk)
-    if tag in lists.LIST_TAGS:
-        raise TypeError(f"min/max over tag {tag!r} is not defined")
+    _require(tag, "approx distinct")
     if not n_valid:
-        return None, None, n_rows, 0
-    if tag == "d128":
-        pairs = np.asarray(blockmod.decode_values(
-            payload, meta, n_valid, tag, codec))
-        lo, hi = _d128_minmax(pairs)
-        return lo, hi, n_rows, n_valid
+        return None, n_rows, 0
     if codec == "dict":
         u = dictionary.decode_dictionary(payload, meta, tag)
-        return u[0], u[len(u) - 1], n_rows, n_valid
-    if codec == "rle" and tag != "bytes":
+        h = hll.hash_bytes(u) if tag == "bytes" else hll.hash_fixed(np.asarray(u))
+    elif codec == "rle":
         rv, _rl = blockmod.decode_rle_runs(payload, meta, n_valid, tag)
-        v = np.asarray(rv)
-        return v.min(), v.max(), n_rows, n_valid
-    values = blockmod.decode_values(payload, meta, n_valid, tag, codec)
-    if tag == "bytes":
-        import pyarrow.compute as pc
-
-        mm = pc.min_max(strings.to_arrow(values))
-        return mm["min"].as_py(), mm["max"].as_py(), n_rows, n_valid
-    v = np.asarray(values)
-    return v.min(), v.max(), n_rows, n_valid
-
-
-def column_minmax(spark: SparkSession, blocks_path: str, manifest_path: str,
-                  column: str, predicate=None,
-                  run_ids: list[str] | None = None) -> DataFrame:
-    """One-row (column, vmin, vmax, n_rows, n_nulls), value-exact and
-    predicate-aware — the companion to stats.column_minmax (which reads
-    only float64 zone leaves and can't filter).  Sorted dictionaries
-    answer min/max in O(1); the result is typed by the table schema, so
-    int64 beyond 2^53 and byte strings stay exact."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    is_dec = isinstance(field.dataType, T.DecimalType)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, meta=meta, run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-    out_schema = T.StructType([
-        T.StructField("vmin", field.dataType, True),
-        T.StructField("vmax", field.dataType, True),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("nulls", T.LongType(), False),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                b = blks[i]
-                if not b.is_valid:
-                    n_sel = (grows[i].as_py() if isinstance(mask, str)
-                             else int(mask.sum()))
-                    if n_sel:
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.nulls(1, out_t), pa.nulls(1, out_t),
-                             pa.array([n_sel], pa.int64()),
-                             pa.array([n_sel], pa.int64())],
-                            names=["vmin", "vmax", "rows", "nulls"])
-                    continue
-                if isinstance(mask, str):  # 'all'
-                    lo, hi, n_rows, n_valid = _block_minmax(b.as_py())
-                else:
-                    vals, _v, tag, codec, n_sel = blockmod.decode_block_rows(
-                        b.as_py(), mask)
-                    if tag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"min/max over tag {tag!r} is not defined")
-                    n_rows, n_valid = n_sel, len(vals)
-                    if not n_valid:
-                        lo = hi = None
-                    elif tag == "d128":
-                        lo, hi = _d128_minmax(np.asarray(vals))
-                    elif tag == "bytes":
-                        import pyarrow.compute as pc
-
-                        mm = pc.min_max(strings.to_arrow(vals))
-                        lo, hi = mm["min"].as_py(), mm["max"].as_py()
-                    else:
-                        v = np.asarray(vals)
-                        lo, hi = v.min(), v.max()
-                if is_dec:
-                    # unscaled ints (i64 low words or d128 exact ints)
-                    lo_arr = _dec_scalar_arr(lo, out_t)
-                    hi_arr = _dec_scalar_arr(hi, out_t)
-                elif lo is None:
-                    lo_arr = hi_arr = pa.nulls(1, out_t)
-                elif is_bytes:
-                    lo_arr = pa.array([lo]).cast(out_t)
-                    hi_arr = pa.array([hi]).cast(out_t)
-                else:
-                    lo_arr = pa.array(np.asarray([lo])).cast(out_t)
-                    hi_arr = pa.array(np.asarray([hi])).cast(out_t)
-                yield pa.RecordBatch.from_arrays(
-                    [lo_arr, hi_arr,
-                     pa.array([n_rows], pa.int64()),
-                     pa.array([n_rows - n_valid], pa.int64())],
-                    names=["vmin", "vmax", "rows", "nulls"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    return partials.agg(
-        F.min("vmin").alias("vmin"), F.max("vmax").alias("vmax"),
-        F.coalesce(F.sum("rows"), F.lit(0)).alias("n_rows"),
-        F.coalesce(F.sum("nulls"), F.lit(0)).alias("n_nulls")).select(
-        F.lit(column).alias("column"), "vmin", "vmax", "n_rows", "n_nulls")
-
-
-def column_distinct(spark: SparkSession, blocks_path: str,
-                    manifest_path: str, column: str,
-                    predicate=None,
-                    run_ids: list[str] | None = None) -> DataFrame:
-    """DISTINCT values of ``column`` (NULL excluded, SQL COUNT(DISTINCT)
-    semantics) — dict blocks contribute their dictionary directly
-    WITHOUT decoding the code stream (every entry occurs by
-    construction); rle blocks their run values; others np.unique.  Only
-    per-block distinct sets cross the shuffle, so a 100 TB low-
-    cardinality column folds to n_blocks x n_distinct tiny rows.
-    Returns one column ``value``; count() it for COUNT(DISTINCT)."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, meta=meta, run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-    out_schema = T.StructType([T.StructField("value", field.dataType, True)])
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                b = blks[i]
-                if not b.is_valid:
-                    continue  # evolved column: all NULL, excluded
-                if isinstance(mask, str):  # 'all'
-                    payload, meta_b, tag, codec, _n, n_valid = _open_dense(
-                        b.as_py())
-                    if tag == "d128" or tag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"distinct over tag {tag!r} is not defined")
-                    if not n_valid:
-                        continue
-                    if codec == "dict":
-                        u = dictionary.decode_dictionary(payload, meta_b, tag)
-                    elif codec == "rle" and tag != "bytes":
-                        rv, _rl = blockmod.decode_rle_runs(
-                            payload, meta_b, n_valid, tag)
-                        u = np.unique(np.asarray(rv))
-                    else:
-                        vals = blockmod.decode_values(
-                            payload, meta_b, n_valid, tag, codec)
-                        if tag == "bytes":
-                            u = strings.to_arrow(vals).unique()
-                        else:
-                            u = np.unique(np.asarray(vals))
-                else:
-                    vals, _v, tag, codec, _n = blockmod.decode_block_rows(
-                        b.as_py(), mask)
-                    if tag == "d128" or tag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"distinct over tag {tag!r} is not defined")
-                    if not len(vals):
-                        continue
-                    u = (strings.to_arrow(vals).unique() if tag == "bytes"
-                         else np.unique(np.asarray(vals)))
-                arr = u if isinstance(u, pa.Array) else (
-                    strings.to_arrow(u) if is_bytes and hasattr(u, "offsets")
-                    else pa.array(np.asarray(u)))
-                if not arr.type.equals(out_t):
-                    arr = arr.cast(out_t)
-                if len(arr):
-                    yield pa.RecordBatch.from_arrays([arr], names=["value"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    return partials.distinct()
+        h = hll.hash_fixed(np.asarray(rv))
+    else:
+        h = _hash_values(blockmod.decode_values(payload, meta, n_valid, tag,
+                                                codec), tag)
+    return h, n_rows, n_valid
 
 
 def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
-                  p: int) -> DataFrame:
+                  column: str, p: int) -> DataFrame:
     """Per-(task, part_id) HyperLogLog register partials over one
-    projected blocks frame -> (part_id, regs binary, rows, nulls).
-    part_id rides along so incremental consumers
-    (streaming/agg_stream.py) can re-validate partials against the
-    manifest's valid pairs after compaction; registers merge
-    commutatively (elementwise max), so any regrouping of partials
-    yields bit-identical final registers."""
+    ``_scan`` frame -> (part_id, regs binary, rows, nulls).  part_id
+    rides along so incremental consumers (streaming/agg_stream.py) can
+    re-validate partials against the manifest's valid pairs after
+    compaction; registers merge commutatively (elementwise max), so any
+    regrouping of partials yields bit-identical final registers."""
     from ..kernels import hll
-
-    def _hash_block_vals(vals, tag: str) -> np.ndarray:
-        if tag == "bytes":
-            arr = (strings.to_arrow(vals) if hasattr(vals, "offsets")
-                   else pa.array(vals))
-            return hll.hash_bytes(
-                [v if isinstance(v, bytes) else v.encode()
-                 for v in arr.unique().to_pylist()])
-        return hll.hash_fixed(np.asarray(vals))
 
     def gen(batches):
         acc: dict[int, list] = {}  # pid -> [regs, rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                a = acc.setdefault(pids[i].as_py(),
-                                   [hll.empty_registers(p), 0, 0])
-                b = blks[i]
-                if not b.is_valid:
-                    # evolved column: all NULL here, nothing to sketch
-                    n_sel = (grows[i].as_py() if isinstance(mask, str)
-                             else int(mask.sum()))
-                    a[1] += n_sel
-                    a[2] += n_sel
-                    continue
-                if isinstance(mask, str):  # 'all'
-                    payload, meta_b, tag, codec, n_rows, n_valid = _open_dense(
-                        b.as_py())
-                    if tag == "d128" or tag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"approx distinct over tag {tag!r} is not defined")
-                    a[1] += n_rows
-                    a[2] += n_rows - n_valid
-                    if not n_valid:
-                        continue
-                    if codec == "dict":
-                        u = dictionary.decode_dictionary(payload, meta_b, tag)
-                        h = (hll.hash_bytes(u) if tag == "bytes"
-                             else hll.hash_fixed(np.asarray(u)))
-                    elif codec == "rle" and tag != "bytes":
-                        rv, _rl = blockmod.decode_rle_runs(
-                            payload, meta_b, n_valid, tag)
-                        h = hll.hash_fixed(np.asarray(rv))
-                    else:
-                        vals = blockmod.decode_values(
-                            payload, meta_b, n_valid, tag, codec)
-                        h = _hash_block_vals(vals, tag)
-                else:
-                    vals, _v, tag, codec, n_sel = blockmod.decode_block_rows(
-                        b.as_py(), mask)
-                    if tag == "d128" or tag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"approx distinct over tag {tag!r} is not defined")
-                    a[1] += n_sel
-                    a[2] += n_sel - len(vals)
-                    if not len(vals):
-                        continue
-                    h = _hash_block_vals(vals, tag)
+        for pid, n_rows, mask, blks in _groups(batches, predicates, [column]):
+            a = acc.setdefault(pid, [hll.empty_registers(p), 0, 0])
+            h, n_sel, n_valid = _block_hashes(blks[column], n_rows, mask)
+            a[1] += n_sel
+            a[2] += n_sel - n_valid
+            if h is not None:
                 hll.update(a[0], h)
         for pid, (regs, rows, nulls) in acc.items():
             yield pa.RecordBatch.from_arrays(
@@ -1334,33 +1115,38 @@ def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
         trimmed(gen), f"{PART_ID} int, regs binary, rows long, nulls long")
 
 
+def _stacked_regs(col, p: int) -> np.ndarray:
+    """A binary column of 2^p-byte register partials -> (n, 2^p) uint8."""
+    m = 1 << p
+    blobs = col.to_pylist()
+    if any(len(b) != m for b in blobs):
+        raise ValueError("HLL register width mismatch in partial")
+    return np.frombuffer(b"".join(blobs), dtype=np.uint8).reshape(-1, m)
+
+
+def _estimate(regs: np.ndarray) -> int:
+    from ..kernels import hll
+
+    return int(round(hll.estimate(regs))) if regs.any() else 0
+
+
 def _fold_hll(partials: DataFrame, column: str, p: int) -> DataFrame:
     """Fold (regs, rows, nulls) partials into the one-row
     column_distinct_approx result (single merge task; registers merge
     by elementwise max)."""
     from ..kernels import hll
 
-    m = 1 << p
-
     def fold(batches):
-        regs = hll.empty_registers(p)
-        rows = 0
-        nulls = 0
+        regs, rows, nulls = hll.empty_registers(p), 0, 0
         for batch in batches:
-            names = batch.schema.names
-            rcol = batch.column(names.index("regs"))
-            rrows = batch.column(names.index("rows"))
-            rnulls = batch.column(names.index("nulls"))
-            for i in range(batch.num_rows):
-                part = np.frombuffer(rcol[i].as_py(), dtype=np.uint8)
-                if len(part) != m:
-                    raise ValueError("HLL register width mismatch in partial")
-                np.maximum(regs, part, out=regs)
-                rows += rrows[i].as_py()
-                nulls += rnulls[i].as_py()
-        est = int(round(hll.estimate(regs))) if regs.any() else 0
+            get = dict(zip(batch.schema.names, batch.columns))
+            if batch.num_rows:
+                np.maximum(regs, _stacked_regs(get["regs"], p).max(axis=0),
+                           out=regs)
+            rows += sum(get["rows"].to_pylist())
+            nulls += sum(get["nulls"].to_pylist())
         yield pa.RecordBatch.from_arrays(
-            [pa.array([est], pa.int64()),
+            [pa.array([_estimate(regs)], pa.int64()),
              pa.array([rows], pa.int64()),
              pa.array([nulls], pa.int64())],
             names=["approx_distinct", "n_rows", "n_nulls"])
@@ -1396,9 +1182,43 @@ def column_distinct_approx(spark: SparkSession, blocks_path: str,
     ``distinct_stream``/``read_distinct`` (same partials, same
     estimate)."""
     predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, run_ids=run_ids)
-    return _fold_hll(_hll_partials(blocks, predicates, p), column, p)
+    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
+                   run_ids=run_ids)
+    return _fold_hll(_hll_partials(blocks, predicates, column, p), column, p)
+
+
+def _grouped_sketch_partials(spark: SparkSession, blocks_path: str,
+                             manifest_path: str, group_column: str,
+                             value_column: str, predicates, run_ids,
+                             sketch, fields: list[tuple]) -> DataFrame:
+    """Per-(block, group) sketch partials of ``value_column`` -> (value,
+    <fields>).  ``sketch(kept, cnt, segments, tag, ranked)`` turns one
+    block's groups into its sketch columns: ``segments`` maps a group
+    id to the group's non-null selected values (byte values as
+    dictionary ranks, ``ranked`` = (base, rank_to_idx))."""
+    meta = manifestmod.table_meta(spark, manifest_path)
+    gdt = _fields(meta)[group_column].dataType
+    dims = [(_arrow_type(spark, gdt), _is_bytes(gdt))]
+    schema = T.StructType([T.StructField("value", gdt, True)] + [
+        T.StructField(n, t, True) for n, t in fields])
+
+    def gen(batches):
+        for _pid, n_rows, mask, blks in _groups(
+                batches, predicates, [group_column, value_column]):
+            gid, _g, cnt, kept, keys = _group_ids(
+                [(blks[group_column], *dims[0])], n_rows, mask)
+            vals, gidv, tag, ranked = _aligned_values(
+                blks[value_column], n_rows, mask, gid, True)
+            segments = dict(_segments(gidv, vals))
+            cols = sketch(kept, cnt[kept], segments, tag, ranked)
+            if cols is not None:
+                yield pa.RecordBatch.from_arrays(
+                    [keys[0], *cols], names=["value"] + [n for n, _t in fields])
+
+    blocks = _scan(spark, blocks_path, manifest_path,
+                   [group_column, value_column], predicates,
+                   run_ids=run_ids, meta=meta)
+    return blocks.mapInArrow(trimmed(gen), schema)
 
 
 def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
@@ -1412,257 +1232,105 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
     columns inside one parquet row, so each task folds block pairs into
     per-(block, group) registers; what crosses the shuffle is
     n_blocks x n_groups x 2^p bytes (p=12 -> 4 KB per group row)
-    regardless of value cardinality, and the final fold is one
-    groupBy(value) with a commutative register max-merge.  Groups must
-    be low-cardinality (the same dict/rle assumption grouped_sum
-    makes); values hash per row (splitmix64 for fixed widths; byte
-    values hash their per-block dictionary uniques once and gather by
-    code).
+    regardless of value cardinality, and the final fold hashes the
+    partials by group and max-merges each group's registers in one
+    ``mapInArrow`` (the grouped form of ``_fold_hll``).  Groups must be
+    low-cardinality (the same dict/rle assumption grouped_sum makes);
+    values hash per row (splitmix64 for fixed widths; byte values hash
+    their per-block dictionary uniques once and gather by rank).
 
     SQL semantics: NULL groups aggregate into a NULL-group row; NULL
     values never count.  Deterministic (fixed hashes), ~1.6% standard
     error at p=12, time-travel via ``run_ids``.  Returns
     (value, approx_distinct, cnt); ``cnt`` is the group's row count."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
+    import pyarrow.compute as pc
 
     from ..kernels import hll
 
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[group_column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, group_column,
-                          predicates, value_column=value_column, meta=meta,
-                          run_ids=run_ids)
-    from .decode import arrow_out_type
+    def sketch(kept, cnt, segments, tag, ranked):
+        _require(tag, "approx distinct")
+        if ranked is not None:  # byte ranks -> hashes of the dictionary
+            base, rank_to_idx = ranked
+            h_of_rank = hll.hash_bytes(base.to_pylist())[rank_to_idx]
+        regs = []
+        for g in kept:
+            r = hll.empty_registers(p)
+            if int(g) in segments:
+                v = segments[int(g)]
+                hll.update(r, h_of_rank[v] if ranked is not None
+                           else hll.hash_fixed(v))
+            regs.append(r.tobytes())
+        return [pa.array(regs, pa.binary()), pa.array(cnt, pa.int64())]
 
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-    out_schema = T.StructType([
-        T.StructField("value", field.dataType, True),
-        T.StructField("regs", T.BinaryType(), False),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-    m = 1 << p
+    partials = _grouped_sketch_partials(
+        spark, blocks_path, manifest_path, group_column, value_column,
+        _normalize_predicates(predicate), run_ids, sketch,
+        [("regs", T.BinaryType()), ("cnt", T.LongType())])
+    vtype = partials.schema["value"].dataType
 
-    def _value_hashes(blk: bytes):
-        """Full-length row hashes of the value block -> (hashes_full
-        uint64, valid_mask_full)."""
-        payload, validity, meta_b, tag, codec, n_rows = blockmod.open_block(blk)
-        if tag == "d128" or tag in lists.LIST_TAGS:
-            raise TypeError(
-                f"approx distinct over tag {tag!r} is not defined")
-        n_valid = int(validity.sum()) if validity is not None else n_rows
-        if tag == "bytes":
-            if codec == "dict":
-                uniques, codes = dictionary.decode_parts(
-                    payload, meta_b, n_valid, tag)
-                codes = np.asarray(codes, dtype=np.int64)
-            else:
-                vals = blockmod.decode_values(payload, meta_b, n_valid,
-                                              tag, codec)
-                de = strings.to_arrow(vals).dictionary_encode()
-                uniques = strings.from_arrow(
-                    de.dictionary.combine_chunks()
-                    if isinstance(de.dictionary, pa.ChunkedArray)
-                    else de.dictionary)
-                codes = np.asarray(de.indices).astype(np.int64)
-            h = hll.hash_bytes(uniques)[codes]
-        else:
-            vals = blockmod.decode_values(payload, meta_b, n_valid, tag, codec)
-            h = hll.hash_fixed(np.asarray(vals))
-        full = np.zeros(n_rows, dtype=np.uint64)
-        if validity is None:
-            full[:] = h
-            return full, np.ones(n_rows, dtype=bool)
-        vmask = validity.astype(bool)
-        full[vmask] = h
-        return full, vmask
+    def fold(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        de = pc.dictionary_encode(tbl.column("value").combine_chunks(),
+                                  null_encoding="encode")
+        idx = np.asarray(de.indices).astype(np.int64)
+        regs = np.zeros((len(de.dictionary), 1 << p), dtype=np.uint8)
+        np.maximum.at(regs, idx, _stacked_regs(tbl.column("regs")
+                                               .combine_chunks(), p))
+        cnt = np.zeros(len(de.dictionary), dtype=np.int64)
+        np.add.at(cnt, idx, tbl.column("cnt").to_numpy().astype(np.int64))
+        yield pa.RecordBatch.from_arrays(
+            [de.dictionary, pa.array([_estimate(r) for r in regs], pa.int64()),
+             pa.array(cnt, pa.int64())],
+            names=["value", "approx_distinct", "cnt"])
 
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                if vb.is_valid:
-                    hfull, vmask = _value_hashes(vb.as_py())
-                else:
-                    hfull = np.zeros(n_rows, dtype=np.uint64)
-                    vmask = np.zeros(n_rows, dtype=bool)
-                sel = (np.ones(len(gfull), dtype=bool)
-                       if isinstance(mask, str) else mask)
-                nu = len(uniq) if uniq is not None else 0
-                g1 = gfull + 1  # slot 0 = NULL group
-                cnt = np.bincount(g1[sel], minlength=nu + 1)
-                # per-group registers: one vectorized update per group
-                # SEGMENT of the (group-sorted) surviving hash rows
-                regs_by = {}
-                idx = np.nonzero(vmask & sel)[0]
-                if len(idx):
-                    order = np.argsort(g1[idx], kind="stable")
-                    sg = g1[idx][order]
-                    sh = hfull[idx][order]
-                    bounds = np.nonzero(np.diff(sg))[0] + 1
-                    starts = np.concatenate(([0], bounds))
-                    ends = np.concatenate((bounds, [len(sg)]))
-                    for s, e in zip(starts, ends):
-                        regs = hll.empty_registers(p)
-                        hll.update(regs, sh[s:e])
-                        regs_by[int(sg[s])] = regs
-                keep = cnt > 0
-                if not keep.any():
-                    continue
-                kept_idx = np.nonzero(keep[1:])[0]
-                if uniq is not None and len(kept_idx):
-                    varr = (strings.to_arrow(uniq) if is_bytes
-                            else pa.array(np.asarray(uniq)))
-                    if not varr.type.equals(out_t):
-                        varr = varr.cast(out_t)
-                    if len(kept_idx) < len(varr):
-                        varr = varr.take(pa.array(kept_idx))
-                else:
-                    varr = pa.nulls(0, out_t)
-                if keep[0]:
-                    varr = pa.concat_arrays([pa.nulls(1, out_t), varr])
-                kept_gids = ([0] if keep[0] else []) + [int(g) + 1
-                                                        for g in kept_idx]
-                empty = hll.empty_registers(p)
-                regs_arr = [regs_by.get(g, empty).tobytes()
-                            for g in kept_gids]
-                yield pa.RecordBatch.from_arrays(
-                    [varr,
-                     pa.array(regs_arr, pa.binary()),
-                     pa.array(cnt[keep].astype(np.int64), pa.int64())],
-                    names=["value", "regs", "cnt"])
+    return partials.repartition("value").mapInArrow(
+        trimmed(fold), T.StructType([
+            T.StructField("value", vtype, True),
+            T.StructField("approx_distinct", T.LongType(), False),
+            T.StructField("cnt", T.LongType(), False)]))
 
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
 
-    import pandas as pd
-    from pyspark.sql.functions import PandasUDFType
+def _block_summary(blk, n_rows: int, mask, k: int):
+    """(equi-depth summary | None, n_sel, n_valid) of one block: rle
+    blocks summarize (run_value, run_length) pairs and dict blocks
+    (dictionary, code histogram) — both EXACT per block when distinct
+    <= k, without materializing rows."""
+    from ..kernels import quantile as qk
 
-    # explicit UDF kinds: `from __future__ import annotations` turns the
-    # type hints into strings, which Spark's hint inference rejects
-    @F.pandas_udf("binary", PandasUDFType.GROUPED_AGG)
-    def _merge_regs(regs_series: pd.Series) -> bytes:
-        acc = hll.empty_registers(p)
-        for blob in regs_series:
-            r = np.frombuffer(blob, dtype=np.uint8)
-            if len(r) != m:
-                raise ValueError("HLL register width mismatch in partial")
-            np.maximum(acc, r, out=acc)
-        return acc.tobytes()
-
-    @F.pandas_udf("long", PandasUDFType.SCALAR)
-    def _estimate(regs_series: pd.Series) -> pd.Series:
-        out = []
-        for blob in regs_series:
-            r = np.frombuffer(blob, dtype=np.uint8)
-            out.append(int(round(hll.estimate(r))) if r.any() else 0)
-        return pd.Series(out, dtype="int64")
-
-    # grouped-agg pandas UDFs cannot mix with JVM aggregates in one
-    # agg, so the row count folds through a pandas sum as well
-    @F.pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def _sum_cnt(cnt_series: pd.Series) -> int:
-        return int(cnt_series.sum())
-
-    folded = partials.groupBy("value").agg(
-        _merge_regs(F.col("regs")).alias("regs"),
-        _sum_cnt(F.col("cnt")).alias("cnt"))
-    return folded.select(
-        "value", _estimate(F.col("regs")).alias("approx_distinct"), "cnt")
+    if blk is None:
+        return None, _n_sel(n_rows, mask), 0
+    vals, w, tag, n_valid, _codec = _global_values(blk, n_rows, mask, True)
+    _require(tag, "quantiles", bytes_ok=False)
+    v = np.asarray(vals)
+    smry = (qk.summarize(v, None if w is None else w.astype(np.float64), k)
+            if n_valid else None)
+    return smry, _n_sel(n_rows, mask), n_valid
 
 
 def _quantile_partials(blocks: DataFrame, predicates: list[Predicate],
-                       k: int, task_k: int) -> DataFrame:
+                       column: str, k: int, task_k: int) -> DataFrame:
     """Per-(task, part_id) equi-depth summary partials over one
-    projected blocks frame -> (part_id, vs, ws, rows, nulls).  part_id
-    rides along so incremental consumers (streaming/agg_stream.py) can
+    ``_scan`` frame -> (part_id, vs, ws, rows, nulls).  part_id rides
+    along so incremental consumers (streaming/agg_stream.py) can
     re-validate partials against the manifest after compaction;
     summaries merge by weighted concatenation, so any regrouping only
     REFINES the final summary (rank error never grows past the
     per-partial bound)."""
     from ..kernels import quantile as qk
 
-    def _block_summary(blk: bytes, mask):
-        """(values, weights) equi-depth summary of one block under the
-        resolved mask, plus (n_rows_or_sel, n_valid)."""
-        if isinstance(mask, str):  # 'all'
-            payload, meta_b, tag, codec, n_rows, n_valid = _open_dense(blk)
-            if tag == "bytes" or tag == "d128" or tag in lists.LIST_TAGS:
-                raise TypeError(
-                    f"quantiles over tag {tag!r} are not defined")
-            if not n_valid:
-                return None, n_rows, 0
-            if codec == "rle":
-                rv, rl = blockmod.decode_rle_runs(payload, meta_b,
-                                                  n_valid, tag)
-                return qk.summarize(np.asarray(rv), rl.astype(np.float64),
-                                    k), n_rows, n_valid
-            if codec == "dict":
-                uniques, codes = dictionary.decode_parts(
-                    payload, meta_b, n_valid, tag)
-                cnt = np.bincount(codes, minlength=len(uniques))
-                return qk.summarize(np.asarray(uniques),
-                                    cnt.astype(np.float64), k), \
-                    n_rows, n_valid
-            vals = blockmod.decode_values(payload, meta_b, n_valid,
-                                          tag, codec)
-            return qk.summarize(np.asarray(vals), None, k), n_rows, n_valid
-        vals, _v, tag, codec, n_sel = blockmod.decode_block_rows(blk, mask)
-        if tag == "bytes" or tag == "d128" or tag in lists.LIST_TAGS:
-            raise TypeError(f"quantiles over tag {tag!r} are not defined")
-        v = np.asarray(vals)
-        if not len(v):
-            return None, n_sel, 0
-        return qk.summarize(v, None, k), n_sel, len(v)
-
     def gen(batches):
         acc: dict[int, list] = {}  # pid -> [summaries, rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                a = acc.setdefault(pids[i].as_py(), [[], 0, 0])
-                b = blks[i]
-                if not b.is_valid:
-                    n_sel = (grows[i].as_py() if isinstance(mask, str)
-                             else int(mask.sum()))
-                    a[1] += n_sel
-                    a[2] += n_sel
-                    continue
-                smry, n_rows, n_valid = _block_summary(b.as_py(), mask)
-                a[1] += n_rows
-                a[2] += n_rows - n_valid
-                if smry is not None:
-                    a[0].append(smry)
+        for pid, n_rows, mask, blks in _groups(batches, predicates, [column]):
+            a = acc.setdefault(pid, [[], 0, 0])
+            smry, n_sel, n_valid = _block_summary(blks[column], n_rows,
+                                                  mask, k)
+            a[1] += n_sel
+            a[2] += n_sel - n_valid
+            if smry is not None:
+                a[0].append(smry)
         for pid, (summaries, rows, nulls) in acc.items():
             v, w = qk.merge(summaries, k=task_k)
             yield pa.RecordBatch.from_arrays(
@@ -1687,27 +1355,18 @@ def _fold_quantiles(partials: DataFrame, column: str,
     from ..kernels import quantile as qk
 
     def fold(batches):
-        summaries = []
-        rows = 0
-        nulls = 0
+        summaries, rows, nulls = [], 0, 0
         for batch in batches:
-            names = batch.schema.names
-            vcol = batch.column(names.index("vs"))
-            wcol = batch.column(names.index("ws"))
-            rrows = batch.column(names.index("rows"))
-            rnulls = batch.column(names.index("nulls"))
-            for i in range(batch.num_rows):
-                summaries.append((
-                    np.asarray(vcol[i].as_py(), dtype=np.float64),
-                    np.asarray(wcol[i].as_py(), dtype=np.float64)))
-                rows += rrows[i].as_py()
-                nulls += rnulls[i].as_py()
+            get = dict(zip(batch.schema.names, batch.columns))
+            summaries += [(np.asarray(v, dtype=np.float64),
+                           np.asarray(w, dtype=np.float64))
+                          for v, w in zip(get["vs"].to_pylist(),
+                                          get["ws"].to_pylist())]
+            rows += sum(get["rows"].to_pylist())
+            nulls += sum(get["nulls"].to_pylist())
         v, w = qk.merge(summaries, k=None)  # lossless final fold
-        if len(v):
-            vals = qk.quantile(v, w, plist)
-            varr = pa.array(vals, pa.float64())
-        else:
-            varr = pa.nulls(len(plist), pa.float64())
+        varr = (pa.array(qk.quantile(v, w, plist), pa.float64()) if len(v)
+                else pa.nulls(len(plist), pa.float64()))
         yield pa.RecordBatch.from_arrays(
             [pa.array(plist, pa.float64()), varr,
              pa.array([rows] * len(plist), pa.int64()),
@@ -1718,6 +1377,14 @@ def _fold_quantiles(partials: DataFrame, column: str,
         trimmed(fold), "p double, value double, n_rows long, n_nulls long")
     return merged.select(F.lit(column).alias("column"),
                          "p", "value", "n_rows", "n_nulls")
+
+
+def _probs(probs) -> list[float]:
+    plist = [float(p) for p in (probs if hasattr(probs, "__iter__")
+                                else [probs])]
+    if not plist or any(p < 0 or p > 1 for p in plist):
+        raise ValueError("probs must be non-empty, each in [0, 1]")
+    return plist
 
 
 def column_quantiles(spark: SparkSession, blocks_path: str,
@@ -1743,15 +1410,106 @@ def column_quantiles(spark: SparkSession, blocks_path: str,
     one row per probability: (column, p, value, n_rows, n_nulls).  For
     the incremental variant over a growing table see
     streaming/agg_stream.py ``quantile_stream``/``read_quantiles``."""
-    plist = [float(p) for p in (probs if hasattr(probs, "__iter__")
-                                else [probs])]
-    if not plist or any(p < 0 or p > 1 for p in plist):
-        raise ValueError("probs must be non-empty, each in [0, 1]")
+    plist = _probs(probs)
     predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, run_ids=run_ids)
+    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
+                   run_ids=run_ids)
     return _fold_quantiles(
-        _quantile_partials(blocks, predicates, k, task_k), column, plist)
+        _quantile_partials(blocks, predicates, column, k, task_k),
+        column, plist)
+
+
+def grouped_quantiles(spark: SparkSession, blocks_path: str,
+                      manifest_path: str, group_column: str,
+                      value_column: str, probs=(0.25, 0.5, 0.75),
+                      k: int = 256, predicate=None,
+                      run_ids: list[str] | None = None) -> DataFrame:
+    """GROUP BY ``group_column`` -> APPROX quantiles of
+    ``value_column`` — the "p95 latency per group" shape.  Each task
+    emits one equi-depth summary row per (block, group): <= ``k``
+    weighted points each (kernels/quantile.py), so the shuffle moves
+    O(n_blocks x n_groups x k) tiny rows regardless of row count, and
+    the per-group fold (applyInPandas over the low-cardinality group
+    key) merges summaries losslessly before reading the percentiles.
+    Rank error per group ~ N_group/(2k): sub-percent at the default.
+
+    SQL semantics: NULL groups form their own row; NULL values are
+    excluded per group (percentile of an all-null group is NULL).
+    Deterministic — pure arithmetic, no sampling.  Returns one row per
+    (group, p): (value, p, q, n_rows, n_nulls)."""
+    from ..kernels import quantile as qk
+
+    plist = _probs(probs)
+
+    def sketch(kept, cnt, segments, tag, ranked):
+        _require(tag, "quantiles", bytes_ok=False)
+        vs, ws, nulls = [], [], []
+        for g, c in zip(kept, cnt):
+            seg = segments.get(int(g))
+            sm = (qk.summarize(seg.astype(np.float64), None, k)
+                  if seg is not None else (np.zeros(0), np.zeros(0)))
+            vs.append(sm[0].tolist())
+            ws.append(sm[1].tolist())
+            nulls.append(int(c) - (len(seg) if seg is not None else 0))
+        return [pa.array(vs, pa.list_(pa.float64())),
+                pa.array(ws, pa.list_(pa.float64())),
+                pa.array(cnt, pa.int64()), pa.array(nulls, pa.int64())]
+
+    partials = _grouped_sketch_partials(
+        spark, blocks_path, manifest_path, group_column, value_column,
+        _normalize_predicates(predicate), run_ids, sketch,
+        [("vs", T.ArrayType(T.DoubleType())),
+         ("ws", T.ArrayType(T.DoubleType())),
+         ("rows", T.LongType()), ("nulls", T.LongType())])
+    fold_schema = T.StructType([
+        T.StructField("value", partials.schema["value"].dataType, True),
+        T.StructField("p", T.DoubleType(), False),
+        T.StructField("q", T.DoubleType(), True),
+        T.StructField("n_rows", T.LongType(), False),
+        T.StructField("n_nulls", T.LongType(), False),
+    ])
+
+    def fold_group(pdf):
+        import pandas as pd
+
+        summaries = [(np.asarray(v, dtype=np.float64),
+                      np.asarray(w, dtype=np.float64))
+                     for v, w in zip(pdf["vs"], pdf["ws"])]
+        v, w = qk.merge(summaries, k=None)  # lossless final fold
+        n = len(plist)
+        return pd.DataFrame({
+            "value": [pdf["value"].iloc[0]] * n, "p": plist,
+            "q": qk.quantile(v, w, plist) if len(v) else [None] * n,
+            "n_rows": [int(pdf["rows"].sum())] * n,
+            "n_nulls": [int(pdf["nulls"].sum())] * n,
+        })
+
+    return partials.groupBy("value").applyInPandas(fold_group, fold_schema)
+
+
+# ---------------------------------------------------------------------------
+# top-k
+# ---------------------------------------------------------------------------
+
+
+def _block_topk(blk, mask, k: int, ascending: bool, is_bytes: bool):
+    """One block's own top-k candidate values (unordered) -> (values,
+    tag).  A full sorted dictionary answers from its head/tail plus the
+    code histogram (duplicates among the true top-k), never the rows."""
+    if mask is not None:
+        vals, _v, tag, _c, _n = blockmod.decode_block_rows(blk, mask)
+        return vals, tag
+    payload, meta, tag, codec, _n, n_valid = _open_dense(blk)
+    if codec == "dict" and n_valid and tag != "d128":
+        uniques, codes = dictionary.decode_parts(payload, meta, n_valid, tag)
+        nu = len(uniques)
+        if nu >= k:
+            sel = np.arange(k) if ascending else np.arange(nu - k, nu)
+            rep = np.repeat(sel, np.bincount(codes, minlength=nu)[sel])
+            rep = rep[:k] if ascending else rep[-k:]
+            return (strings.take(uniques, rep) if is_bytes
+                    else np.asarray(uniques)[rep]), tag
+    return blockmod.decode_values(payload, meta, n_valid, tag, codec), tag
 
 
 def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
@@ -1761,131 +1519,56 @@ def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
     """ORDER BY ``column`` LIMIT ``k`` pushed into the encoded domain:
     each block contributes only its own top-k values (np.partition over
     the dense decode; dict blocks read the SORTED dictionary's tail
-    directly, O(k) without touching the code stream when full), so k
-    rows per block ride the final single-partition fold instead of the
+    directly, O(k) without touching the values when full), so k rows
+    per block ride the final single-partition fold instead of the
     column.  NULLs never rank (SQL ORDER BY ... LIMIT semantics with
     NULLS LAST).  Returns one column ``value`` with at most k rows,
     globally ordered."""
+    import pyarrow.compute as pc
+
     if k <= 0:
         raise ValueError("k must be positive")
     predicates = _normalize_predicates(predicate)
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    is_dec = isinstance(field.dataType, T.DecimalType)
-    out_schema = T.StructType([T.StructField("value", field.dataType, True)])
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
+    dt = _fields(meta)[column].dataType
+    is_bytes, is_dec = _is_bytes(dt), isinstance(dt, T.DecimalType)
+    out_t = _arrow_type(spark, dt)
 
     def gen(batches):
-        import pyarrow.compute as pc
+        for _pid, _n, mask, blks in _groups(batches, predicates, [column]):
+            if blks[column] is None:
+                continue  # evolved column: all NULL, never ranks
+            vals, tag = _block_topk(blks[column], mask, k, ascending, is_bytes)
+            _require(tag, "topk", d128_ok=True)
+            if tag == "d128":
+                pairs = np.asarray(vals)
+                order = np.lexsort((pairs[:, 0].astype(np.uint64),
+                                    pairs[:, 1]))
+                sel = order[:k] if ascending else order[-k:]
+                out = _dec_arr(_d128_ints(pairs[sel]), out_t)
+            elif is_bytes:
+                out = strings.to_arrow(vals)
+                if len(out) > k:
+                    out = out.take(pc.select_k_unstable(
+                        out, k, sort_keys=[("dummy", "ascending" if ascending
+                                            else "descending")]))
+            else:
+                v = np.asarray(vals)
+                if len(v) > k:
+                    v = (np.partition(v, k - 1)[:k] if ascending
+                         else np.partition(v, len(v) - k)[-k:])
+                # decimal p<=18: unscaled int64 order == value order
+                # (same scale), so the partition above is exact
+                out = _dec_arr(v, out_t) if is_dec else pa.array(v)
+            if len(out):
+                yield pa.RecordBatch.from_arrays(
+                    [out if out.type.equals(out_t) else out.cast(out_t)],
+                    names=["value"])
 
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                b = blks[i]
-                if not b.is_valid:
-                    continue  # evolved column: all NULL, never ranks
-                if isinstance(mask, str):
-                    payload, meta_b, tag, codec, n_rows, n_valid = _open_dense(
-                        b.as_py())
-                    if tag in lists.LIST_TAGS:
-                        raise TypeError(f"topk over tag {tag!r} is not defined")
-                    if tag == "d128":
-                        vals = np.asarray(blockmod.decode_values(
-                            payload, meta_b, n_valid, tag, codec))
-                    elif codec == "dict" and n_valid:
-                        # sorted dictionary: the extreme k values are the
-                        # dictionary's head/tail — but only entries that
-                        # actually occur... every dict entry occurs by
-                        # construction (built from this block's values),
-                        # so slice directly, weight irrelevant for topk
-                        # beyond multiplicity: take codes only when the
-                        # dictionary is smaller than k
-                        uniques, codes = dictionary.decode_parts(
-                            payload, meta_b, n_valid, tag)
-                        nu = len(uniques)
-                        if nu >= k:
-                            sel = (np.arange(k) if ascending
-                                   else np.arange(nu - k, nu))
-                            vals = (strings.take(uniques, sel) if is_bytes
-                                    else np.asarray(uniques)[sel])
-                            # k distinct extremes bound the block's true
-                            # top-k only if multiplicity >= 1 each — they
-                            # do (dict entries occur); but duplicates
-                            # among the true top-k need the code stream:
-                            # expand via the histogram, capped at k
-                            cnt = np.bincount(codes, minlength=nu)[sel]
-                            rep = (np.repeat(np.arange(len(sel)), cnt)
-                                   [:k] if ascending else
-                                   np.repeat(np.arange(len(sel)), cnt)[-k:])
-                            vals = (strings.take(vals, rep) if is_bytes
-                                    else np.asarray(vals)[rep])
-                        else:
-                            full = (dictionary.decode(payload, meta_b,
-                                                      n_valid, tag))
-                            vals = full
-                    else:
-                        vals = blockmod.decode_values(payload, meta_b,
-                                                      n_valid, tag, codec)
-                else:
-                    vals, _v, tag, codec, _n = blockmod.decode_block_rows(
-                        b.as_py(), mask)
-                    if tag in lists.LIST_TAGS:
-                        raise TypeError(f"topk over tag {tag!r} is not defined")
-                if tag == "d128":
-                    pairs = np.asarray(vals)
-                    if not len(pairs):
-                        continue
-                    order = np.lexsort((pairs[:, 0].astype(np.uint64),
-                                        pairs[:, 1]))
-                    sel = order[:k] if ascending else order[-k:]
-                    ints = [(int(pairs[j, 1]) << 64)
-                            + int(pairs[j, 0].astype(np.uint64))
-                            for j in sel]
-                    out = _dec_arr(ints, out_t)
-                elif is_bytes:
-                    arr = strings.to_arrow(vals) if hasattr(vals, "offsets") \
-                        else pa.array(vals)
-                    if len(arr) > k:
-                        order = "ascending" if ascending else "descending"
-                        idx = pc.select_k_unstable(
-                            arr, k, sort_keys=[("dummy", order)])
-                        arr = arr.take(idx)
-                    out = arr
-                else:
-                    v = np.asarray(vals)
-                    if len(v) > k:
-                        part = (np.partition(v, k - 1)[:k] if ascending
-                                else np.partition(v, len(v) - k)[-k:])
-                        v = part
-                    # decimal p<=18: unscaled int64 order == value order
-                    # (same scale), so partition above is exact
-                    out = _dec_arr(v, out_t) if is_dec else pa.array(v)
-                if len(out) == 0:
-                    continue
-                if not out.type.equals(out_t):
-                    out = out.cast(out_t)
-                yield pa.RecordBatch.from_arrays([out], names=["value"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
+    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
+                   run_ids=run_ids, meta=meta)
+    partials = blocks.mapInArrow(
+        trimmed(gen), T.StructType([T.StructField("value", dt, True)]))
     order_col = F.col("value").asc() if ascending else F.col("value").desc()
     return partials.orderBy(order_col).limit(k)
 
@@ -1914,8 +1597,6 @@ def _threshold_pred(column: str, dt, bound, ascending: bool,
     pruning, p>18 via Decimal128RangePredicate), string/binary rank
     lexicographically (24-byte prefix zones prune), everything else is
     a plain range."""
-    from pyspark.sql import types as T
-
     from .filters import (BytesRangePredicate, Decimal128RangePredicate,
                           RangePredicate)
 
@@ -1972,18 +1653,13 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
     they decode-and-check); string/binary columns rank
     lexicographically via BytesRangePredicate (24-byte prefix zones
     prune).  List/map/struct order columns are not supported."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
     from .decode import decode_table
     from .filters import ConstPredicate
 
     if k <= 0:
         raise ValueError("k must be positive")
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}.get(column)
+    field = _fields(meta).get(column)
     if field is None:
         raise KeyError(f"unknown column {column}")
     dt = field.dataType
@@ -2023,711 +1699,6 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
     return out
 
 
-def column_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
-               column: str, predicate=None,
-               run_ids: list[str] | None = None) -> DataFrame:
-    """AVG(``column``) in the compressed domain with SQL null semantics:
-    nulls leave both the numerator and the denominator (AVG over an
-    all-null selection is NULL, never 0/0).  Built on ``column_sum``'s
-    partials, so the shuffle shape is identical (one partial row per
-    task).  Decimal columns sum exactly in the unscaled domain first
-    and divide once at the end (the quotient itself is a float64 —
-    document consumers that need digit-exact division should divide
-    ``column_sum`` themselves).  Returns one row:
-    (column, avg_value double, n_rows, n_nulls)."""
-    s = column_sum(spark, blocks_path, manifest_path, column,
-                   predicate=predicate, run_ids=run_ids)
-    n_valid = F.col("n_rows") - F.col("n_nulls")
-    return s.select(
-        "column",
-        F.when(n_valid == 0, F.lit(None).cast("double"))
-        .otherwise(F.col("sum_value").cast("double") / n_valid)
-        .alias("avg_value"),
-        "n_rows", "n_nulls")
-
-
-def column_count(spark: SparkSession, blocks_path: str, manifest_path: str,
-                 column: str, predicate=None,
-                 run_ids: list[str] | None = None) -> DataFrame:
-    """COUNT(``column``) / COUNT(*) in the compressed domain: each task
-    reads only block VALIDITY (open_block parses the header + validity
-    bitmap; values are never decoded), so the operator works for every
-    tag — including byte/list columns that ``column_sum`` refuses.
-    Under a predicate, partially-surviving blocks count
-    ``validity[mask]``.  Returns one row:
-    (column, n_values, n_rows, n_nulls) where n_values = COUNT(column)
-    and n_rows = COUNT(*) of the surviving selection."""
-    predicates = _normalize_predicates(predicate)
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, column,
-                          predicates, run_ids=run_ids)
-
-    def gen(batches):
-        acc: dict[int, list] = {}  # pid -> [rows, nulls]
-        for batch in batches:
-            names = batch.schema.names
-            blks = batch.column(names.index("__blk"))
-            grows = batch.column(names.index("n_rows"))
-            pids = batch.column(names.index(PART_ID))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                a = acc.setdefault(pids[i].as_py(), [0, 0])
-                b = blks[i]
-                if not b.is_valid:
-                    # evolved column: the group predates it — all NULL
-                    n_sel = (grows[i].as_py() if isinstance(mask, str)
-                             else int(mask.sum()))
-                    a[0] += n_sel
-                    a[1] += n_sel
-                    continue
-                _p, validity, _m, _t, _c, n_rows = blockmod.open_block(
-                    b.as_py())
-                if isinstance(mask, str):  # 'all'
-                    n_sel = n_rows
-                    n_valid = (int(validity.sum()) if validity is not None
-                               else n_rows)
-                else:
-                    n_sel = int(mask.sum())
-                    n_valid = (int(validity[mask].sum())
-                               if validity is not None else n_sel)
-                a[0] += n_sel
-                a[1] += n_sel - n_valid
-        rows = [(pid, *v) for pid, v in acc.items() if v[0]]
-        if rows:
-            cols = list(zip(*rows))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[0], pa.int32()),
-                 pa.array(cols[1], pa.int64()),
-                 pa.array(cols[2], pa.int64())],
-                names=[PART_ID, "rows", "nulls"])
-
-    partials = blocks.mapInArrow(
-        trimmed(gen), f"{PART_ID} int, rows long, nulls long")
-    return (partials.agg(
-        F.sum("rows").alias("n_rows"), F.sum("nulls").alias("n_nulls"))
-        .select(F.lit(column).alias("column"),
-                (F.coalesce(F.col("n_rows"), F.lit(0))
-                 - F.coalesce(F.col("n_nulls"), F.lit(0))).alias("n_values"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).alias("n_rows"),
-                F.coalesce(F.col("n_nulls"), F.lit(0)).alias("n_nulls")))
-
-
-def grouped_sum_multi(spark: SparkSession, blocks_path: str,
-                      manifest_path: str, group_columns,
-                      value_column: str, predicate=None,
-                      run_ids: list[str] | None = None) -> DataFrame:
-    """GROUP BY (c1, ..., cN) -> SUM(``value_column``), COUNT(*) in the
-    compressed domain — the (lang, repo) / (flag, status) rollup shape.
-    N == 1 delegates to ``grouped_sum`` (which also handles decimal
-    values exactly); N >= 2 is ``grouped_aggs`` with one value column
-    (single composite-coded pass), renamed to the stable
-    (g1..gN, sum_value, cnt) shape.  Decimal value columns are not
-    supported for N >= 2 — use single-column ``grouped_sum`` (exact
-    decimal partials) or ``column_sum`` per group."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    gcols = [str(c) for c in group_columns]
-    if not gcols:
-        raise ValueError("group_columns must be non-empty")
-    if len(set(gcols)) != len(gcols):
-        raise ValueError(f"duplicate group columns {gcols}")
-    if len(gcols) == 1:
-        return (grouped_sum(spark, blocks_path, manifest_path, gcols[0],
-                            value_column, predicate=predicate,
-                            run_ids=run_ids)
-                .withColumnRenamed("value", gcols[0]))
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    if isinstance({f.name: f for f in schema.fields}[value_column].dataType,
-                  T.DecimalType):
-        raise NotImplementedError(
-            "grouped_sum_multi over decimal values is not supported; "
-            "use grouped_sum (exact decimal) per group column")
-    out = grouped_aggs(spark, blocks_path, manifest_path, gcols,
-                       [value_column], predicate=predicate, run_ids=run_ids)
-    return out.select(
-        *gcols, F.col(f"sum_{value_column}").alias("sum_value"), "cnt")
-
-
-def grouped_quantiles(spark: SparkSession, blocks_path: str,
-                      manifest_path: str, group_column: str,
-                      value_column: str, probs=(0.25, 0.5, 0.75),
-                      k: int = 256, predicate=None,
-                      run_ids: list[str] | None = None) -> DataFrame:
-    """GROUP BY ``group_column`` -> APPROX quantiles of
-    ``value_column`` — the "p95 latency per group" shape.  Each task
-    emits one equi-depth summary row per (block, group): <= ``k``
-    weighted points each (kernels/quantile.py), so the shuffle moves
-    O(n_blocks x n_groups x k) tiny rows regardless of row count, and
-    the per-group fold (applyInPandas over the low-cardinality group
-    key) merges summaries losslessly before reading the percentiles.
-    Rank error per group ~ N_group/(2k): sub-percent at the default.
-
-    SQL semantics: NULL groups form their own row; NULL values are
-    excluded per group (percentile of an all-null group is NULL).
-    Deterministic — pure arithmetic, no sampling.  Returns one row per
-    (group, p): (value, p, q, n_rows, n_nulls)."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    from ..kernels import quantile as qk
-
-    plist = [float(p) for p in (probs if hasattr(probs, "__iter__")
-                                else [probs])]
-    if not plist or any(p < 0 or p > 1 for p in plist):
-        raise ValueError("probs must be non-empty, each in [0, 1]")
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[group_column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, group_column,
-                          predicates, value_column=value_column, meta=meta,
-                          run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-    out_schema = T.StructType([
-        T.StructField("value", field.dataType, True),
-        T.StructField("vs", T.ArrayType(T.DoubleType()), False),
-        T.StructField("ws", T.ArrayType(T.DoubleType()), False),
-        T.StructField("rows", T.LongType(), False),
-        T.StructField("nulls", T.LongType(), False),
-    ])
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                if vb.is_valid:
-                    vfull, vmask = _dense_full(vb.as_py())
-                else:
-                    vfull = np.zeros(n_rows, dtype=np.int64)
-                    vmask = np.zeros(n_rows, dtype=bool)
-                sel = (np.ones(n_rows, dtype=bool)
-                       if isinstance(mask, str) else mask)
-                nu = len(uniq) if uniq is not None else 0
-                g1 = gfull + 1  # slot 0 = NULL group
-                cnt = np.bincount(g1[sel], minlength=nu + 1)
-                # per-group summaries over group-sorted valid rows
-                smry_by: dict[int, tuple] = {}
-                idx = np.nonzero(vmask & sel)[0]
-                if len(idx):
-                    order = np.argsort(g1[idx], kind="stable")
-                    sg = g1[idx][order]
-                    sv = vfull[idx][order].astype(np.float64)
-                    bounds = np.nonzero(np.diff(sg))[0] + 1
-                    starts = np.concatenate(([0], bounds))
-                    ends = np.concatenate((bounds, [len(sg)]))
-                    for s, e in zip(starts, ends):
-                        smry_by[int(sg[s])] = qk.summarize(sv[s:e], None, k)
-                keep = cnt > 0
-                if not keep.any():
-                    continue
-                kept_idx = np.nonzero(keep[1:])[0]
-                if uniq is not None and len(kept_idx):
-                    varr = (strings.to_arrow(uniq) if is_bytes
-                            else pa.array(np.asarray(uniq)))
-                    if not varr.type.equals(out_t):
-                        varr = varr.cast(out_t)
-                    if len(kept_idx) < len(varr):
-                        varr = varr.take(pa.array(kept_idx))
-                else:
-                    varr = pa.nulls(0, out_t)
-                if keep[0]:
-                    varr = pa.concat_arrays([pa.nulls(1, out_t), varr])
-                kept_gids = ([0] if keep[0] else []) + [int(g) + 1
-                                                        for g in kept_idx]
-                vs_arr, ws_arr, nulls_arr = [], [], []
-                for g, c in zip(kept_gids, cnt[keep]):
-                    sm = smry_by.get(g)
-                    if sm is None:
-                        vs_arr.append([])
-                        ws_arr.append([])
-                        nulls_arr.append(int(c))
-                    else:
-                        vs_arr.append(sm[0].tolist())
-                        ws_arr.append(sm[1].tolist())
-                        nulls_arr.append(int(c) - int(round(sm[1].sum())))
-                yield pa.RecordBatch.from_arrays(
-                    [varr,
-                     pa.array(vs_arr, pa.list_(pa.float64())),
-                     pa.array(ws_arr, pa.list_(pa.float64())),
-                     pa.array(cnt[keep].astype(np.int64), pa.int64()),
-                     pa.array(nulls_arr, pa.int64())],
-                    names=["value", "vs", "ws", "rows", "nulls"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    fold_schema = T.StructType([
-        T.StructField("value", field.dataType, True),
-        T.StructField("p", T.DoubleType(), False),
-        T.StructField("q", T.DoubleType(), True),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_nulls", T.LongType(), False),
-    ])
-
-    def fold_group(pdf):
-        import pandas as pd
-
-        summaries = [(np.asarray(v, dtype=np.float64),
-                      np.asarray(w, dtype=np.float64))
-                     for v, w in zip(pdf["vs"], pdf["ws"])]
-        v, w = qk.merge(summaries, k=None)  # lossless final fold
-        rows = int(pdf["rows"].sum())
-        nulls = int(pdf["nulls"].sum())
-        qs = (qk.quantile(v, w, plist) if len(v)
-              else [None] * len(plist))
-        return pd.DataFrame({
-            "value": [pdf["value"].iloc[0]] * len(plist),
-            "p": plist,
-            "q": qs,
-            "n_rows": [rows] * len(plist),
-            "n_nulls": [nulls] * len(plist),
-        })
-
-    return partials.groupBy("value").applyInPandas(fold_group, fold_schema)
-
-
-def _value_ranks(payload, vmeta, nval: int, vtag: str, vcodec: str):
-    """Dense value stream of one block -> (ranks, base, rank_to_idx)
-    for order-based grouped reductions (grouped_minmax, grouped_topk).
-    Byte values rank through the dictionary — sorted dict blocks hand
-    the code stream over AS the rank; other codecs rank each block
-    distinct once via sort_indices — so strings never compare
-    row-by-row.  ``base``/``rank_to_idx`` map a rank back to its value
-    (``base.take(rank_to_idx[rank])``); numeric values rank as
-    themselves (base=None)."""
-    import pyarrow.compute as pc
-
-    if vtag == "bytes":
-        if vcodec == "dict":
-            uv, vcodes = dictionary.decode_parts(payload, vmeta, nval, vtag)
-            return (vcodes.astype(np.int64), strings.to_arrow(uv),
-                    np.arange(len(uv), dtype=np.int64))
-        vals = blockmod.decode_values(payload, vmeta, nval, vtag, vcodec)
-        de = strings.to_arrow(vals).dictionary_encode()
-        base = de.dictionary
-        order0 = np.asarray(pc.sort_indices(base))
-        rank_of = np.empty(len(base), np.int64)
-        rank_of[order0] = np.arange(len(base))
-        return (rank_of[np.asarray(de.indices).astype(np.int64)],
-                base, order0.astype(np.int64))
-    return (np.asarray(blockmod.decode_values(payload, vmeta, nval, vtag,
-                                              vcodec)), None, None)
-
-
-def grouped_minmax(spark: SparkSession, blocks_path: str,
-                   manifest_path: str, group_column: str,
-                   value_column: str, predicate=None,
-                   run_ids: list[str] | None = None) -> DataFrame:
-    """GROUP BY ``group_column`` -> MIN/MAX(``value_column``), COUNT(*)
-    in the compressed domain, value-exact: partials are emitted TYPED
-    (int64 beyond 2^53, byte strings, decimals, timestamps never round
-    through float64) and fold under Catalyst's own F.min/F.max, so one
-    row per (block, group) crosses the shuffle.  Byte values reduce as
-    dictionary RANKS (sorted dict blocks: the code stream IS the rank;
-    other codecs rank once per block distinct via sort_indices), never
-    comparing strings row-by-row.  SQL semantics: NULL group keys form
-    their own row; NULL values never rank (an all-null group's min/max
-    is NULL).  decimal(p<=18) reduces unscaled; d128 and list tags
-    raise.  Returns (value, min_value, max_value, cnt)."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
-    gfield, vfield = fields[group_column], fields[value_column]
-    g_is_bytes = gfield.dataType.typeName() in ("string", "binary")
-    v_is_bytes = vfield.dataType.typeName() in ("string", "binary")
-    v_dec = isinstance(vfield.dataType, T.DecimalType)
-    if v_dec and vfield.dataType.precision > 18:
-        raise NotImplementedError(
-            "grouped_minmax over decimal(p>18) d128 columns is not "
-            "supported; use column_minmax per group or precision <= 18")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, group_column,
-                          predicates, value_column=value_column, meta=meta,
-                          run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_tg = arrow_out_type(gfield.dataType, tz)
-    out_tv = arrow_out_type(vfield.dataType, tz)
-    out_schema = T.StructType([
-        T.StructField("value", gfield.dataType, True),
-        T.StructField("mn", vfield.dataType, True),
-        T.StructField("mx", vfield.dataType, True),
-        T.StructField("cnt", T.LongType(), False),
-    ])
-
-    def _vals_arr(reduced: np.ndarray, got: np.ndarray, base, rank_to_idx):
-        """Per-group reduced ranks/values -> typed arrow array (null
-        where the group had no valid value)."""
-        if base is not None:  # byte path: rank -> dictionary position
-            idx = [int(rank_to_idx[int(r)]) if g else None
-                   for r, g in zip(reduced, got)]
-            arr = base.take(pa.array(idx, pa.int64()))
-            return arr if arr.type.equals(out_tv) else arr.cast(out_tv)
-        if v_dec:
-            return _dec_arr([int(r) if g else None
-                             for r, g in zip(reduced, got)], out_tv)
-        arr = pa.array(reduced, mask=~got)
-        return arr if arr.type.equals(out_tv) else arr.cast(out_tv)
-
-    def gen(batches):
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:  # evolved group column: every row is the NULL group
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                sel = (np.ones(n_rows, dtype=bool)
-                       if isinstance(mask, str) else mask)
-                nu = len(uniq) if uniq is not None else 0
-                g1 = gfull + 1  # slot 0 = NULL group
-                cnt = np.bincount(g1[sel], minlength=nu + 1)
-                keep = cnt > 0
-                if not keep.any():
-                    continue
-                # value ranks over valid & selected rows
-                base = rank_to_idx = None
-                if vb.is_valid:
-                    payload, validity, vmeta, vtag, vcodec, vn = \
-                        blockmod.open_block(vb.as_py())
-                    if vtag == "d128" or vtag in lists.LIST_TAGS:
-                        raise TypeError(
-                            f"grouped min/max over tag {vtag!r} is not "
-                            "defined")
-                    nval = (int(validity.sum()) if validity is not None
-                            else vn)
-                    ranks, base, rank_to_idx = _value_ranks(
-                        payload, vmeta, nval, vtag, vcodec)
-                    if validity is None:
-                        w = sel
-                        rv = ranks[w]
-                    else:
-                        w = validity & sel
-                        didx = np.cumsum(validity) - 1
-                        rv = ranks[didx[w]]
-                    gw = g1[w]
-                else:  # evolved value column: all values NULL
-                    gw = np.empty(0, dtype=np.int64)
-                    rv = np.empty(0, dtype=np.int64)
-                nvg = np.bincount(gw, minlength=nu + 1)
-                if rv.dtype.kind == "f":
-                    mins = np.full(nu + 1, np.inf)
-                    maxs = np.full(nu + 1, -np.inf)
-                else:
-                    rv = rv.astype(np.int64)
-                    ii = np.iinfo(np.int64)
-                    mins = np.full(nu + 1, ii.max, dtype=np.int64)
-                    maxs = np.full(nu + 1, ii.min, dtype=np.int64)
-                np.minimum.at(mins, gw, rv)
-                np.maximum.at(maxs, gw, rv)
-                # group key array for kept groups (NULL row first)
-                kept_idx = np.nonzero(keep[1:])[0]
-                if uniq is not None and len(kept_idx):
-                    varr = (strings.to_arrow(uniq) if g_is_bytes
-                            else pa.array(np.asarray(uniq)))
-                    if not varr.type.equals(out_tg):
-                        varr = varr.cast(out_tg)
-                    if len(kept_idx) < len(varr):
-                        varr = varr.take(pa.array(kept_idx))
-                else:
-                    varr = pa.nulls(0, out_tg)
-                if keep[0]:
-                    varr = pa.concat_arrays([pa.nulls(1, out_tg), varr])
-                got = nvg[keep] > 0
-                yield pa.RecordBatch.from_arrays(
-                    [varr,
-                     _vals_arr(mins[keep], got, base, rank_to_idx),
-                     _vals_arr(maxs[keep], got, base, rank_to_idx),
-                     pa.array(cnt[keep].astype(np.int64), pa.int64())],
-                    names=["value", "mn", "mx", "cnt"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    return (partials.groupBy("value")
-            .agg(F.min("mn").alias("min_value"),
-                 F.max("mx").alias("max_value"),
-                 F.sum("cnt").alias("cnt")))
-
-
-def grouped_aggs(spark: SparkSession, blocks_path: str, manifest_path: str,
-                 group_columns, value_columns, predicate=None,
-                 run_ids: list[str] | None = None,
-                 minmax: bool = False) -> DataFrame:
-    """GROUP BY (g1..gN) -> SUM / AVG / COUNT of EACH of (v1..vM) plus
-    COUNT(*), all in ONE pass over the blocks parquet — the full TPC-H
-    Q1 rollup shape.  The wide layout aligns every group leaf and every
-    value leaf inside one parquet row, so each task joint-codes the
-    group streams once (mixed-radix composite, memory scales with the
-    combinations PRESENT in the block) and reduces all M value columns
-    against the same composite codes with bincount; one partial row per
-    (block, combination) crosses the shuffle regardless of row count.
-
-    SQL semantics per dimension/value: NULL group keys form their own
-    row; NULL values count toward cnt but not toward sum/avg/n_<v>
-    (an all-null (group, value) pair sums/averages NULL).  Decimal
-    value columns are not supported here (use grouped_sum per column:
-    exact unscaled partials).  Returns one column per group dimension,
-    then per value column v: sum_<v> (double), avg_<v> (double),
-    n_<v> (valid-value count), and finally cnt.  ``minmax=True`` adds
-    min_<v>/max_<v>, TYPED by the value column (partials carry the
-    column's own type and fold under Catalyst F.min/F.max, so int64
-    beyond 2^53 never rounds through the double sum lanes)."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    gcols = [str(c) for c in group_columns]
-    vcols = [str(c) for c in value_columns]
-    if not gcols or not vcols:
-        raise ValueError("group_columns and value_columns must be non-empty")
-    if len(set(gcols)) != len(gcols) or len(set(vcols)) != len(vcols):
-        raise ValueError("duplicate columns in group/value lists")
-    predicates = _normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
-    for v in vcols:
-        if isinstance(fields[v].dataType, T.DecimalType):
-            raise NotImplementedError(
-                f"grouped_aggs over decimal column {v!r} is not supported; "
-                "use grouped_sum (exact decimal partials) per column")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, gcols[0],
-                          predicates, meta=meta, run_ids=run_ids,
-                          extra_group_columns=gcols[1:],
-                          extra_value_columns=vcols)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_ts = [arrow_out_type(fields[c].dataType, tz) for c in gcols]
-    is_bytes = [fields[c].dataType.typeName() in ("string", "binary")
-                for c in gcols]
-    vfields = []
-    for j, v in enumerate(vcols):
-        vfields += [T.StructField(f"__nv_{j}", T.LongType(), False),
-                    T.StructField(f"__sl_{j}", T.LongType(), False),
-                    T.StructField(f"__sd_{j}", T.DoubleType(), False),
-                    T.StructField(f"__if_{j}", T.BooleanType(), False)]
-        if minmax:
-            vfields += [T.StructField(f"__mn_{j}", fields[v].dataType, True),
-                        T.StructField(f"__mx_{j}", fields[v].dataType, True)]
-    v_out_ts = [arrow_out_type(fields[v].dataType, tz) for v in vcols] \
-        if minmax else None
-    out_schema = T.StructType(
-        [T.StructField(c, fields[c].dataType, True) for c in gcols]
-        + [T.StructField("__cnt", T.LongType(), False)] + vfields)
-
-    def gen(batches):
-        for batch in batches:
-            names = batch.schema.names
-            gblk_cols = ([batch.column(names.index("__blk"))]
-                         + [batch.column(names.index(f"__gblk_{j}"))
-                            for j in range(1, len(gcols))])
-            vblk_cols = [batch.column(names.index(f"__vblk_{j}"))
-                         for j in range(1, len(vcols) + 1)]
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                n_rows = grows[i].as_py()
-                uniqs, g1s, dims = [], [], []
-                for gc in gblk_cols:
-                    gb = gc[i]
-                    if gb.is_valid:
-                        u, gfull = _group_codes(gb.as_py())
-                    else:
-                        u, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                    uniqs.append(u)
-                    g1s.append(gfull + 1)
-                    dims.append((len(u) if u is not None else 0) + 1)
-                sel = (np.ones(n_rows, dtype=bool)
-                       if isinstance(mask, str) else mask)
-                radix = 1
-                for dd in dims:  # python ints: no wraparound in the check
-                    radix *= dd
-                if radix >= 1 << 63:
-                    raise ValueError(
-                        "composite group code would overflow int64: "
-                        f"per-block dictionary sizes {dims} multiply to "
-                        f"{radix}; group by fewer/lower-cardinality "
-                        "columns or use smaller blocks")
-                comp = g1s[0].astype(np.int64).copy()
-                for dd, g1 in zip(dims[1:], g1s[1:]):
-                    comp *= dd
-                    comp += g1
-                sel_idx = np.nonzero(sel)[0]
-                if not len(sel_idx):
-                    continue
-                ukeys, inv = np.unique(comp[sel_idx], return_inverse=True)
-                cnt = np.bincount(inv, minlength=len(ukeys))
-                per_v = []
-                for j, vc in enumerate(vblk_cols):
-                    vb = vc[i]
-                    if vb.is_valid:
-                        vfull, vmask = _dense_full(vb.as_py())
-                    else:  # evolved value column: all NULL here
-                        vfull = np.zeros(n_rows, dtype=np.int64)
-                        vmask = np.zeros(n_rows, dtype=bool)
-                    wv_idx = np.nonzero(vmask & sel)[0]
-                    pos = np.searchsorted(ukeys, comp[wv_idx])
-                    nv = np.bincount(pos, minlength=len(ukeys))
-                    vv = vfull[wv_idx]
-                    if vfull.dtype.kind == "f":
-                        s_d = np.bincount(pos, weights=vv,
-                                          minlength=len(ukeys))
-                        s_l = np.zeros(len(ukeys), dtype=np.int64)
-                        is_f = True
-                    else:
-                        s_l = np.zeros(len(ukeys), dtype=np.int64)
-                        np.add.at(s_l, pos, vv.astype(np.int64))
-                        s_d = np.zeros(len(ukeys), dtype=np.float64)
-                        is_f = False
-                    mn_arr = mx_arr = None
-                    if minmax:
-                        if is_f:
-                            mins = np.full(len(ukeys), np.inf)
-                            maxs = np.full(len(ukeys), -np.inf)
-                            red = vv
-                        else:
-                            ii = np.iinfo(np.int64)
-                            mins = np.full(len(ukeys), ii.max, np.int64)
-                            maxs = np.full(len(ukeys), ii.min, np.int64)
-                            red = vv.astype(np.int64)
-                        np.minimum.at(mins, pos, red)
-                        np.maximum.at(maxs, pos, red)
-                        got_v = nv > 0
-                        mn_arr = pa.array(mins, mask=~got_v)
-                        mx_arr = pa.array(maxs, mask=~got_v)
-                        if not mn_arr.type.equals(v_out_ts[j]):
-                            mn_arr = mn_arr.cast(v_out_ts[j])
-                            mx_arr = mx_arr.cast(v_out_ts[j])
-                    per_v.append((nv, s_l, s_d, is_f, mn_arr, mx_arr))
-                # decompose composite keys -> per-dimension group arrays
-                rem = ukeys.copy()
-                idxs = []
-                for dd in reversed(dims[1:]):
-                    idxs.append(rem % dd)
-                    rem //= dd
-                idxs.append(rem)
-                idxs.reverse()
-                arrs = []
-                for j, (u, idx_j) in enumerate(zip(uniqs, idxs)):
-                    if u is not None and len(u):
-                        ua = (strings.to_arrow(u) if is_bytes[j]
-                              else pa.array(np.asarray(u)))
-                        if not ua.type.equals(out_ts[j]):
-                            ua = ua.cast(out_ts[j])
-                        base = pa.concat_arrays([pa.nulls(1, out_ts[j]), ua])
-                    else:
-                        base = pa.nulls(1, out_ts[j])
-                    arrs.append(base.take(pa.array(idx_j.astype(np.int64))))
-                vout, vnames = [], []
-                for j, (nv, s_l, s_d, is_f, mn_arr, mx_arr) in \
-                        enumerate(per_v):
-                    vout += [pa.array(nv.astype(np.int64), pa.int64()),
-                             pa.array(s_l, pa.int64()),
-                             pa.array(s_d, pa.float64()),
-                             pa.array(np.full(len(ukeys), is_f), pa.bool_())]
-                    vnames += [f"__nv_{j}", f"__sl_{j}", f"__sd_{j}",
-                               f"__if_{j}"]
-                    if minmax:
-                        vout += [mn_arr, mx_arr]
-                        vnames += [f"__mn_{j}", f"__mx_{j}"]
-                yield pa.RecordBatch.from_arrays(
-                    arrs + [pa.array(cnt.astype(np.int64), pa.int64())]
-                    + vout,
-                    names=list(gcols) + ["__cnt"] + vnames)
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
-    folds = [F.sum("__cnt").alias("__cnt")]
-    for j in range(len(vcols)):
-        folds += [F.sum(f"__nv_{j}").alias(f"__nv_{j}"),
-                  F.sum(f"__sl_{j}").alias(f"__sl_{j}"),
-                  F.sum(f"__sd_{j}").alias(f"__sd_{j}"),
-                  F.max(f"__if_{j}").alias(f"__if_{j}")]
-        if minmax:
-            folds += [F.min(f"__mn_{j}").alias(f"__mn_{j}"),
-                      F.max(f"__mx_{j}").alias(f"__mx_{j}")]
-    agg = partials.groupBy(*gcols).agg(*folds)
-    outs = list(gcols)
-    for j, v in enumerate(vcols):
-        s = (F.when(F.col(f"__nv_{j}") == 0, F.lit(None).cast("double"))
-             .when(F.col(f"__if_{j}"), F.col(f"__sd_{j}") + F.col(f"__sl_{j}"))
-             .otherwise(F.col(f"__sl_{j}").cast("double")))
-        outs.append(s.alias(f"sum_{v}"))
-        outs.append((s / F.col(f"__nv_{j}")).alias(f"avg_{v}"))
-        outs.append(F.col(f"__nv_{j}").alias(f"n_{v}"))
-        if minmax:
-            outs += [F.col(f"__mn_{j}").alias(f"min_{v}"),
-                     F.col(f"__mx_{j}").alias(f"max_{v}")]
-    outs.append(F.col("__cnt").alias("cnt"))
-    return agg.select(*outs)
-
-
-def grouped_avg(spark: SparkSession, blocks_path: str, manifest_path: str,
-                group_column: str, value_column: str, predicate=None,
-                run_ids: list[str] | None = None) -> DataFrame:
-    """GROUP BY ``group_column`` -> AVG(``value_column``) with SQL null
-    semantics (NULL values excluded; all-null group averages NULL).
-    Thin shape over ``grouped_aggs``: (value, avg_value, n_values,
-    cnt)."""
-    out = grouped_aggs(spark, blocks_path, manifest_path, [group_column],
-                       [value_column], predicate=predicate, run_ids=run_ids)
-    return out.select(
-        F.col(group_column).alias("value"),
-        F.col(f"avg_{value_column}").alias("avg_value"),
-        F.col(f"n_{value_column}").alias("n_values"),
-        "cnt")
-
 
 def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
                  group_column: str, value_column: str, k: int,
@@ -2744,118 +1715,58 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
     rank.  decimal(p<=18) ranks unscaled and emits exact decimals;
     d128 and list tags raise.  Returns (value, item, rnk) with rnk
     1..k per group."""
-    import json as jsonmod
-
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     if k <= 0:
         raise ValueError("k must be positive")
     predicates = _normalize_predicates(predicate)
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
-    gfield, vfield = fields[group_column], fields[value_column]
-    g_is_bytes = gfield.dataType.typeName() in ("string", "binary")
-    v_dec = isinstance(vfield.dataType, T.DecimalType)
-    if v_dec and vfield.dataType.precision > 18:
+    fields = _fields(meta)
+    gdt, vdt = fields[group_column].dataType, fields[value_column].dataType
+    v_dec = isinstance(vdt, T.DecimalType)
+    if v_dec and vdt.precision > 18:
         raise NotImplementedError(
             "grouped_topk over decimal(p>18) d128 columns is not "
             "supported; use column_topk per group or precision <= 18")
-    blocks = _blocks_proj(spark, blocks_path, manifest_path, group_column,
-                          predicates, value_column=value_column, meta=meta,
-                          run_ids=run_ids)
-    from .decode import arrow_out_type
-
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_tg = arrow_out_type(gfield.dataType, tz)
-    out_tv = arrow_out_type(vfield.dataType, tz)
-    out_schema = T.StructType([
-        T.StructField("value", gfield.dataType, True),
-        T.StructField("item", vfield.dataType, False),
-    ])
+    dim = (_arrow_type(spark, gdt), _is_bytes(gdt))
+    out_tv = _arrow_type(spark, vdt)
 
     def gen(batches):
-        import pyarrow.compute as pc
+        for _pid, n_rows, mask, blks in _groups(
+                batches, predicates, [group_column, value_column]):
+            gid, _g, _cnt, kept, keys = _group_ids(
+                [(blks[group_column], *dim)], n_rows, mask)
+            rv, gw, tag, ranked = _aligned_values(
+                blks[value_column], n_rows, mask, gid, True)
+            _require(tag, "grouped topk")
+            if not len(gw):
+                continue
+            order = np.lexsort((rv, gw))
+            gs, rs = gw[order], rv[order]
+            bnd = np.nonzero(np.diff(gs))[0] + 1
+            take = [np.arange(s, min(s + k, e)) if ascending
+                    else np.arange(max(e - k, s), e)
+                    for s, e in zip(np.concatenate(([0], bnd)),
+                                    np.concatenate((bnd, [len(gs)])))]
+            take = np.concatenate(take)
+            garr = keys[0].take(pa.array(np.searchsorted(kept, gs[take])))
+            r_sel = rs[take]
+            if ranked is not None:
+                iarr = ranked[0].take(pa.array(ranked[1][r_sel]))
+            elif v_dec:
+                iarr = _dec_arr(r_sel, out_tv)
+            else:
+                iarr = pa.array(r_sel)
+            yield pa.RecordBatch.from_arrays(
+                [garr, iarr if iarr.type.equals(out_tv) else iarr.cast(out_tv)],
+                names=["value", "item"])
 
-        for batch in batches:
-            names = batch.schema.names
-            gblks = batch.column(names.index("__blk"))
-            vblks = batch.column(names.index("__blk2"))
-            grows = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in _pred_cols(predicates)}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in _pred_cols(predicates)}
-            for i in range(batch.num_rows):
-                mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-                if isinstance(mask, str) and mask == "none":
-                    continue
-                gb, vb = gblks[i], vblks[i]
-                if not vb.is_valid:
-                    continue  # evolved value column: all NULL, never ranks
-                n_rows = grows[i].as_py()
-                if gb.is_valid:
-                    uniq, gfull = _group_codes(gb.as_py())
-                else:
-                    uniq, gfull = None, np.full(n_rows, -1, dtype=np.int64)
-                sel = (np.ones(n_rows, dtype=bool)
-                       if isinstance(mask, str) else mask)
-                payload, validity, vmeta, vtag, vcodec, vn = \
-                    blockmod.open_block(vb.as_py())
-                if vtag == "d128" or vtag in lists.LIST_TAGS:
-                    raise TypeError(
-                        f"grouped topk over tag {vtag!r} is not defined")
-                nval = (int(validity.sum()) if validity is not None else vn)
-                ranks, base, rank_to_idx = _value_ranks(
-                    payload, vmeta, nval, vtag, vcodec)
-                if validity is None:
-                    w = sel
-                    rv = ranks[w]
-                else:
-                    w = validity & sel
-                    didx = np.cumsum(validity) - 1
-                    rv = ranks[didx[w]]
-                gw = (gfull + 1)[w]  # slot 0 = NULL group
-                if not len(gw):
-                    continue
-                order = np.lexsort((rv, gw))
-                gs, rs = gw[order], rv[order]
-                bnd = np.nonzero(np.diff(gs))[0] + 1
-                starts = np.concatenate(([0], bnd))
-                ends = np.concatenate((bnd, [len(gs)]))
-                g_out, r_out = [], []
-                for s, e in zip(starts, ends):
-                    sl = (slice(s, min(s + k, e)) if ascending
-                          else slice(max(e - k, s), e))
-                    g_out.append(np.full(sl.stop - sl.start, gs[s]))
-                    r_out.append(rs[sl])
-                g_sel = np.concatenate(g_out)
-                r_sel = np.concatenate(r_out)
-                # group key array: g_sel holds code+1 values
-                if uniq is not None:
-                    ua = (strings.to_arrow(uniq) if g_is_bytes
-                          else pa.array(np.asarray(uniq)))
-                    if not ua.type.equals(out_tg):
-                        ua = ua.cast(out_tg)
-                    gbase = pa.concat_arrays([pa.nulls(1, out_tg), ua])
-                else:
-                    gbase = pa.nulls(1, out_tg)
-                garr = gbase.take(pa.array(g_sel.astype(np.int64)))
-                if base is not None:
-                    iarr = base.take(pa.array(rank_to_idx[r_sel]))
-                    if not iarr.type.equals(out_tv):
-                        iarr = iarr.cast(out_tv)
-                elif v_dec:
-                    iarr = _dec_arr(r_sel, out_tv)
-                else:
-                    iarr = pa.array(r_sel)
-                    if not iarr.type.equals(out_tv):
-                        iarr = iarr.cast(out_tv)
-                yield pa.RecordBatch.from_arrays([garr, iarr],
-                                                 names=["value", "item"])
-
-    partials = blocks.mapInArrow(trimmed(gen), out_schema)
+    blocks = _scan(spark, blocks_path, manifest_path,
+                   [group_column, value_column], predicates,
+                   run_ids=run_ids, meta=meta)
+    partials = blocks.mapInArrow(trimmed(gen), T.StructType([
+        T.StructField("value", gdt, True),
+        T.StructField("item", vdt, False)]))
     ordc = F.col("item").asc() if ascending else F.col("item").desc()
     w = Window.partitionBy("value").orderBy(ordc)
     return (partials.withColumn("rnk", F.row_number().over(w))
@@ -2889,10 +1800,7 @@ def grouped_topk_rows(spark: SparkSession, blocks_path: str,
     per-block disjunction (linear in n_groups): beyond it, decode + a
     Catalyst window is the right plan — raise the cap deliberately if
     the group column is known-narrow."""
-    import json as jsonmod
-
     from pyspark.sql import Window
-    from pyspark.sql import types as T
 
     from .decode import decode_table
     from .filters import AndPredicate, ConstPredicate, OrPredicate
@@ -2900,8 +1808,7 @@ def grouped_topk_rows(spark: SparkSession, blocks_path: str,
     if k <= 0:
         raise ValueError("k must be positive")
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    fields = {f.name: f for f in schema.fields}
+    fields = _fields(meta)
     if group_column not in fields or value_column not in fields:
         raise KeyError(f"unknown column among ({group_column}, "
                        f"{value_column}); encoded: {list(fields)}")

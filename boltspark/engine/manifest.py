@@ -20,6 +20,7 @@ table-meta row and scalar counts are ever collected.
 from __future__ import annotations
 
 import json
+import logging
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -276,7 +277,9 @@ def _default_fs_is_local(spark: SparkSession | None) -> bool:
         fs = (spark.sparkContext._jsc.hadoopConfiguration()
               .get("fs.defaultFS", "file:///"))
     except Exception:
-        return True  # no JVM conf reachable: local-mode assumption
+        # no JVM conf reachable (e.g. Spark Connect): the default FS is
+        # unknown, so fail closed onto the Spark read path
+        return False
     return fs.startswith("file:")
 
 
@@ -303,16 +306,20 @@ def _meta_rows(spark: SparkSession, manifest_path: str) -> list[tuple]:
     the ``column`` statistics, so only META-bearing groups are read."""
     local = _local_dir(manifest_path, spark)
     if local is not None:
-        try:
-            import pyarrow.dataset as pads
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
+        try:
             ds = pads.dataset(local, format="parquet")
             t = ds.to_table(columns=["run_id", "table_meta"],
                             filter=pads.field("column") == META_KEY)
             return list(zip(t.column("run_id").to_pylist(),
                             t.column("table_meta").to_pylist()))
-        except Exception:
-            pass  # unreadable locally (permissions, odd layout): use Spark
+        except (OSError, pa.ArrowInvalid) as ex:
+            # unreadable locally (permissions, odd layout): use Spark
+            logging.getLogger("boltspark").warning(
+                "manifest %s: local pyarrow read failed (%s); falling back "
+                "to a Spark read", manifest_path, ex)
     rows = (
         spark.read.parquet(manifest_path)
         .filter(F.col("column") == META_KEY)

@@ -140,7 +140,7 @@ def validate_table(
     return {"ok": not errors, "errors": errors}
 
 
-def column_minmax(
+def zone_minmax(
     spark: SparkSession,
     blocks_path: str,
     manifest_path: str,

@@ -38,6 +38,69 @@ def _manifest_stream(spark, manifest_path: str):
             .filter(f"column = '{META_KEY}'"))  # one row per committed run
 
 
+def _run_stream(spark, manifest_path: str, write_run, checkpoint_path: str,
+                trigger_seconds: int | None):
+    """readStream(manifest) -> ``write_run(run)`` for each newly
+    committed run, in run order.  Returns the StreamingQuery."""
+
+    def handle(batch_df, epoch_id: int) -> None:
+        for run in sorted(r["run_id"] for r in
+                          batch_df.select("run_id").distinct().collect()):
+            write_run(run)
+
+    writer = (_manifest_stream(spark, manifest_path).writeStream
+              .foreachBatch(handle)
+              .option("checkpointLocation", checkpoint_path)
+              .outputMode("append"))
+    if trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
+def _core_stream(spark, blocks_path: str, manifest_path: str, out_path: str,
+                 checkpoint_path: str, predicate, trigger_seconds,
+                 dims: list[str], values: list[tuple], sink: tuple):
+    """Per-run partials of the batch aggregate core, written under their
+    stable on-disk sink columns (``sink``: SQL select expressions over
+    the core's partial columns), so files written by earlier versions
+    keep folding."""
+    predicates = aggmod._normalize_predicates(predicate)
+
+    def write_run(run: str) -> None:
+        (aggmod._partials(spark, blocks_path, manifest_path, predicates,
+                          dims, values, run_ids=[run])
+         .selectExpr(PART_ID, *sink)
+         .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
+
+    return _run_stream(spark, manifest_path, write_run, checkpoint_path,
+                       trigger_seconds)
+
+
+def _live(spark, out_path: str, manifest_path: str, *core) -> DataFrame:
+    """The sink's partials under the manifest's CURRENT valid pairs
+    (superseded runs and stale sink directories drop out), mapped back
+    to the core's partial columns by the ``core`` select expressions."""
+    partials = spark.read.parquet(out_path)
+    valid = manifestmod.valid_pairs_df(spark, manifest_path)
+    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    return live.selectExpr(*core) if core else live
+
+
+# on-disk sink columns <-> the aggregate core's partial columns
+_SUM_SINK = ("s_l0 AS s_l", "s_d0 AS s_d", "is_f0 AS is_f", "cnt AS rows",
+             "cnt - nv0 AS nulls")
+_SUM_CORE = ("s_l AS s_l0", "s_d AS s_d0", "is_f AS is_f0", "rows AS cnt",
+             "rows - nulls AS nv0")
+_DEC_SINK = ("s_dec0 AS s_dec", "cnt AS rows", "cnt - nv0 AS nulls")
+_DEC_CORE = ("s_dec AS s_dec0", "rows AS cnt", "rows - nulls AS nv0")
+_VC_SINK = ("g0 AS value", "cnt")
+_VC_CORE = ("value AS g0", "cnt")
+_GSUM_SINK = ("g0 AS value", "cnt", "nv0 AS nv", "s_l0 AS s_l",
+              "s_d0 AS s_d", "is_f0 AS is_f")
+_GSUM_CORE = ("value AS g0", "cnt", "nv AS nv0", "s_l AS s_l0",
+              "s_d AS s_d0", "is_f AS is_f0")
+
+
 def sum_stream(
     spark,
     blocks_path: str,
@@ -51,38 +114,20 @@ def sum_stream(
     """readStream(manifest) -> per-run compressed-domain SUM partials ->
     parquet sink keyed by run.  Read the running total with
     ``read_sum``.  Returns the StreamingQuery.  Decimal columns write
-    exact unscaled decimal(38,0) partials (``_sum_dec_partials``) —
+    exact unscaled decimal(38,0) partials (the core's decimal lane) —
     the incremental total stays digit-exact, same as batch
     ``column_sum``."""
-    predicates = aggmod._normalize_predicates(predicate)
     dec = _decimal_scale(spark, manifest_path, column) is not None
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
-                run_ids=[run])
-            partials = (aggmod._sum_dec_partials(blocks, predicates) if dec
-                        else aggmod._sum_partials(blocks, predicates))
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return _core_stream(spark, blocks_path, manifest_path, out_path,
+                        checkpoint_path, predicate, trigger_seconds, [],
+                        [(column, ("dec",) if dec else ("sum",))],
+                        _DEC_SINK if dec else _SUM_SINK)
 
 
 def _decimal_scale(spark, manifest_path: str, column: str) -> int | None:
     """Scale of ``column`` when it is decimal, else None."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
     meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    t = {f.name: f for f in schema.fields}[column].dataType
-    return t.scale if isinstance(t, T.DecimalType) else None
+    return aggmod._scale(aggmod._fields(meta)[column].dataType)
 
 
 def read_sum(spark, out_path: str, manifest_path: str,
@@ -91,17 +136,15 @@ def read_sum(spark, out_path: str, manifest_path: str,
     column_sum result, honoring the manifest's CURRENT valid pairs
     (superseded runs drop out).  Decimal sinks (s_dec partials) fold in
     the unscaled decimal domain and rescale once — digit-exact."""
-    partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    if "s_dec" in partials.columns:
+    live, scale = _live(spark, out_path, manifest_path), None
+    if "s_dec" in live.columns:
         scale = _decimal_scale(spark, manifest_path, column)
         if scale is None:
             raise TypeError(
                 f"sink at {out_path} holds decimal partials but {column} "
                 "is not a decimal column in the manifest schema")
-        return aggmod._fold_sum_dec(live, column, scale)
-    return aggmod._fold_sum(live, column)
+    live = live.selectExpr(*(_SUM_CORE if scale is None else _DEC_CORE))
+    return aggmod._sum_shape(aggmod._fold(live), column, scale)
 
 
 def value_counts_stream(
@@ -117,46 +160,16 @@ def value_counts_stream(
     """readStream(manifest) -> per-run (part_id, value, cnt) partial
     histograms -> parquet sink keyed by run.  Read the running GROUP BY
     with ``read_value_counts``.  Returns the StreamingQuery."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    predicates = aggmod._normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    vtype = {f.name: f for f in schema.fields}[column].dataType
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
-                run_ids=[run])
-            partials = aggmod._vc_partials(spark, blocks, predicates, vtype)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return _core_stream(spark, blocks_path, manifest_path, out_path,
+                        checkpoint_path, predicate, trigger_seconds,
+                        [column], [], _VC_SINK)
 
 
 def read_value_counts(spark, out_path: str, manifest_path: str) -> DataFrame:
     """Fold the sink's per-run histogram partials into the current
     (value, cnt) GROUP BY result under the manifest's valid pairs."""
-    partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    return live.groupBy("value").agg(F.sum("cnt").alias("cnt"))
-
-
-def _start(man, handle, checkpoint_path: str, trigger_seconds: int | None):
-    writer = (man.writeStream.foreachBatch(handle)
-              .option("checkpointLocation", checkpoint_path)
-              .outputMode("append"))
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    live = _live(spark, out_path, manifest_path, *_VC_CORE)
+    return aggmod._fold(live).select(F.col("g0").alias("value"), "cnt")
 
 
 def distinct_stream(
@@ -179,19 +192,14 @@ def distinct_stream(
     StreamingQuery."""
     predicates = aggmod._normalize_predicates(predicate)
 
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
-                run_ids=[run])
-            partials = aggmod._hll_partials(blocks, predicates, p)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
+    def write_run(run: str) -> None:
+        blocks = aggmod._scan(spark, blocks_path, manifest_path, [column],
+                              predicates, run_ids=[run])
+        (aggmod._hll_partials(blocks, predicates, column, p)
+         .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
 
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return _run_stream(spark, manifest_path, write_run, checkpoint_path,
+                       trigger_seconds)
 
 
 def read_distinct(spark, out_path: str, manifest_path: str,
@@ -201,10 +209,7 @@ def read_distinct(spark, out_path: str, manifest_path: str,
     (superseded runs drop out; the estimate is bit-identical to the
     batch operator on the same live data, since register merge is
     commutative and the hashes are fixed)."""
-    partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    return aggmod._fold_hll(live, column, p)
+    return aggmod._fold_hll(_live(spark, out_path, manifest_path), column, p)
 
 
 def quantile_stream(
@@ -228,19 +233,14 @@ def quantile_stream(
     sum_stream.  Returns the StreamingQuery."""
     predicates = aggmod._normalize_predicates(predicate)
 
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, column, predicates,
-                run_ids=[run])
-            partials = aggmod._quantile_partials(blocks, predicates, k, task_k)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
+    def write_run(run: str) -> None:
+        blocks = aggmod._scan(spark, blocks_path, manifest_path, [column],
+                              predicates, run_ids=[run])
+        (aggmod._quantile_partials(blocks, predicates, column, k, task_k)
+         .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
 
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return _run_stream(spark, manifest_path, write_run, checkpoint_path,
+                       trigger_seconds)
 
 
 def read_quantiles(spark, out_path: str, manifest_path: str,
@@ -248,12 +248,8 @@ def read_quantiles(spark, out_path: str, manifest_path: str,
     """Fold the sink's per-run summary partials into the current
     column_quantiles result under the manifest's valid pairs
     (superseded runs drop out)."""
-    plist = [float(p) for p in (probs if hasattr(probs, "__iter__")
-                                else [probs])]
-    partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    return aggmod._fold_quantiles(live, column, plist)
+    return aggmod._fold_quantiles(_live(spark, out_path, manifest_path),
+                                  column, aggmod._probs(probs))
 
 
 def grouped_sum_stream(
@@ -268,47 +264,22 @@ def grouped_sum_stream(
     trigger_seconds: int | None = None,
 ):
     """readStream(manifest) -> per-run grouped-sum partials (one
-    (part_id, group value, cnt, nv, s_l, s_d) row per (block, group))
-    -> parquet sink keyed by run.  The running GROUP BY ... SUM never
-    rescans old runs: ``read_grouped_sum`` folds n_runs x n_parts x
-    n_groups tiny rows.  Exactly-once per run by the same run-keyed
+    (part_id, group value, cnt, nv, s_l, s_d, is_f) row per (block,
+    group)) -> parquet sink keyed by run.  The running GROUP BY ... SUM
+    never rescans old runs: ``read_grouped_sum`` folds n_runs x n_parts
+    x n_groups tiny rows.  Exactly-once per run by the same run-keyed
     overwrite contract as sum_stream.  Decimal value columns are not
     supported on this path (batch ``grouped_sum`` folds decimals in
-    exact unscaled partials; its per-group decimal strings don't ride
-    the streaming sink) — use ``sum_stream`` per group or the batch
-    operator.  Returns the StreamingQuery."""
-    import json as jsonmod
-
-    from pyspark.sql import types as T
-
-    from ..engine.decode import arrow_out_type
-
+    exact unscaled partials) — use ``sum_stream`` per group or the
+    batch operator.  Returns the StreamingQuery."""
     if _decimal_scale(spark, manifest_path, value_column) is not None:
         raise NotImplementedError(
             "grouped_sum_stream over decimal value columns is not "
             "supported; use batch grouped_sum or sum_stream per group")
-    predicates = aggmod._normalize_predicates(predicate)
-    meta = manifestmod.table_meta(spark, manifest_path)
-    schema = T.StructType.fromJson(jsonmod.loads(meta["schema_json"]))
-    field = {f.name: f for f in schema.fields}[group_column]
-    is_bytes = field.dataType.typeName() in ("string", "binary")
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_t = arrow_out_type(field.dataType, tz)
-
-    def handle(batch_df, epoch_id: int) -> None:
-        runs = sorted(r["run_id"] for r in
-                      batch_df.select("run_id").distinct().collect())
-        for run in runs:
-            blocks = aggmod._blocks_proj(
-                spark, blocks_path, manifest_path, group_column, predicates,
-                value_column=value_column, run_ids=[run])
-            partials = aggmod._gsum_partials(blocks, predicates,
-                                             field.dataType, out_t, is_bytes)
-            partials.write.mode("overwrite").parquet(
-                f"{out_path}/run_id={run}")
-
-    return _start(_manifest_stream(spark, manifest_path), handle,
-                  checkpoint_path, trigger_seconds)
+    return _core_stream(spark, blocks_path, manifest_path, out_path,
+                        checkpoint_path, predicate, trigger_seconds,
+                        [group_column], [(value_column, ("sum",))],
+                        _GSUM_SINK)
 
 
 def read_grouped_sum(spark, out_path: str, manifest_path: str) -> DataFrame:
@@ -316,7 +287,5 @@ def read_grouped_sum(spark, out_path: str, manifest_path: str) -> DataFrame:
     (value, sum_value, cnt) result under the manifest's valid pairs
     (superseded runs drop out) — identical to batch ``grouped_sum`` on
     the same live data."""
-    partials = spark.read.parquet(out_path)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    live = partials.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-    return aggmod._fold_gsum(live)
+    live = _live(spark, out_path, manifest_path, *_GSUM_CORE)
+    return aggmod._gsum_shape(aggmod._fold(live), None)

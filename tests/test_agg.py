@@ -68,6 +68,43 @@ def test_value_counts_matches_catalyst(spark, agg_table):
         assert got == exp, col
 
 
+def test_value_counts_many_distinct_per_block(spark, tmp_path):
+    """A null-free column with more than 4096 distinct values in one
+    block, each value repeated: the per-value row counts must survive
+    (plain and dict codecs, numeric and byte values), and
+    column_distinct — which reads dict blocks' dictionaries only —
+    must give the same value set as Catalyst."""
+    from boltspark.engine.agg import column_distinct
+
+    n, card = 20000, 5000
+    sdf = spark.range(n).select(
+        F.col("id").alias("k"), (F.col("id") % card).alias("hc_plain"),
+        (F.col("id") % card).alias("hc_dict"),
+        F.format_string("v%05d", F.col("id") % card).alias("hc_str"))
+    cols = ("hc_plain", "hc_dict", "hc_str")
+    out, man = str(tmp_path / "blocks"), str(tmp_path / "manifest")
+    encode_table(sdf, out, man, key_cols=("k",), n_parts=1,
+                 block_bytes=1 << 20, resume=False,
+                 codec_override={"hc_plain": "plain", "hc_dict": "dict",
+                                 "hc_str": "dict"})
+    rows = (spark.read.parquet(out)
+            .select(*[F.col("cols").getField(c).getField("codec").alias(c)
+                      for c in cols], "n_rows").collect())
+    assert {tuple(r[c] for c in cols) for r in rows} == {
+        ("plain", "dict", "dict")}
+    assert max(r["n_rows"] for r in rows) > card  # values repeat in a block
+    for col in cols:
+        got = {r["value"]: r["cnt"]
+               for r in value_counts(spark, out, man, col).collect()}
+        exp = {r["value"]: r["cnt"]
+               for r in sdf.groupBy(F.col(col).alias("value"))
+               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
+        assert got == exp, col
+        got_d = {r["value"] for r in
+                 column_distinct(spark, out, man, col).collect()}
+        assert got_d == set(exp), col
+
+
 def test_agg_fast_paths_are_exercised(spark, agg_table):
     """The engineered columns must actually store as rle/dict blocks —
     otherwise the O(runs)/O(distinct) paths above tested nothing."""
@@ -83,7 +120,22 @@ def test_agg_fast_paths_are_exercised(spark, agg_table):
 
 
 def test_block_sum_kernel_fast_paths(rng):
-    from boltspark.engine.agg import _block_sum, _block_value_counts
+    """The core's per-block partial kernel on its codec shortcuts: an rle
+    block sums and counts over runs, a dict block counts through its
+    code histogram; bytes refuse to sum."""
+    import pyarrow as pa
+
+    from boltspark.engine.agg import _block_partial
+
+    def block_sum(blk, n_rows):
+        part = _block_partial(n_rows, None, [],
+                              [(blk, ("sum",), pa.int64(), False)])
+        return int(part["s_l0"][0]), int(part["cnt"][0]), int(part["nv0"][0])
+
+    def block_value_counts(blk, n_rows, out_t, is_bytes):
+        part = _block_partial(n_rows, None, [(blk, out_t, is_bytes)], [])
+        counts = dict(zip(part["g0"].to_pylist(), part["cnt"].tolist()))
+        return counts, counts.pop(None, 0)
 
     # rle: run-heavy ints with nulls
     v = np.repeat(rng.integers(-50, 50, 40), 100).astype(np.int64)
@@ -91,13 +143,12 @@ def test_block_sum_kernel_fast_paths(rng):
     dense = v[validity]
     blk = blockmod.encode_block(dense, "i64", "rle", validity=validity,
                                 outer="zstd")
-    s, n_rows, n_valid = _block_sum(blk)
+    s, n_rows, n_valid = block_sum(blk, len(v))
     assert (s, n_rows, n_valid) == (int(dense.sum()), len(v), int(validity.sum()))
-    u, cnt, n_null = _block_value_counts(blk)
+    got, n_null = block_value_counts(blk, len(v), pa.int64(), False)
     assert n_null == len(v) - int(validity.sum())
     expect = dict(zip(*np.unique(dense, return_counts=True)))
-    assert dict(zip(u.tolist(), cnt.tolist())) == {int(k): int(c)
-                                                   for k, c in expect.items()}
+    assert got == {int(k): int(c) for k, c in expect.items()}
 
     # dict over byte values
     langs = [b"en", b"de", b"fr", b"en", b"en", b"zh"] * 500
@@ -105,11 +156,10 @@ def test_block_sum_kernel_fast_paths(rng):
 
     col = strings.from_pylist(langs)
     blkd = blockmod.encode_block(col, "bytes", "dict", outer="zstd")
-    u2, cnt2, _ = _block_value_counts(blkd)
-    got = dict(zip(u2.to_pylist(), cnt2.tolist()))
-    assert got == {b"en": 1500, b"de": 500, b"fr": 500, b"zh": 500}
+    got2, _ = block_value_counts(blkd, len(langs), pa.binary(), True)
+    assert got2 == {b"en": 1500, b"de": 500, b"fr": 500, b"zh": 500}
     with pytest.raises(TypeError):
-        _block_sum(blkd)
+        block_sum(blkd, len(langs))
 
 
 def test_decode_rle_runs_matches_full_decode(rng):

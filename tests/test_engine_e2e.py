@@ -869,7 +869,7 @@ def test_column_minmax_metadata_only(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from boltspark.engine import encode_table
-    from boltspark.engine.stats import column_minmax
+    from boltspark.engine.stats import zone_minmax
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id", "value",
@@ -878,20 +878,20 @@ def test_column_minmax_metadata_only(spark, tmp_path):
     encode_table(ev, f"{d}/b", f"{d}/m", key_cols=("event_id",), n_parts=4,
                  resume=False)
     mm = {r["column"]: r for r in
-          column_minmax(spark, f"{d}/b", f"{d}/m").collect()}
+          zone_minmax(spark, f"{d}/b", f"{d}/m").collect()}
     exp = ev.agg(F.min("value"), F.max("value"), F.min("v2"), F.max("v2"),
                  F.count(F.lit(1))).first()
     assert mm["value"]["vmin"] == exp[0] and mm["value"]["vmax"] == exp[1]
     assert mm["v2"]["vmin"] == exp[2] and mm["v2"]["vmax"] == exp[3]
     assert mm["value"]["n_rows"] == exp[4]
     assert mm["v2"]["has_null"] and not mm["value"]["has_null"]
-    plan = column_minmax(spark, f"{d}/b", f"{d}/m")._jdf.queryExecution(
+    plan = zone_minmax(spark, f"{d}/b", f"{d}/m")._jdf.queryExecution(
         ).executedPlan().toString()
     rs = [ln for ln in plan.splitlines() if "ReadSchema" in ln and "cols" in ln]
     assert rs and all("block" not in ln for ln in rs), plan
     import pytest as _pytest
     with _pytest.raises(KeyError):
-        column_minmax(spark, f"{d}/b", f"{d}/m", columns=["nope"])
+        zone_minmax(spark, f"{d}/b", f"{d}/m", columns=["nope"])
 
 
 def test_gc_orphans_removes_only_uncommitted_runs(spark, tmp_path):

@@ -124,14 +124,6 @@ def test_grouped_aggs_decimal_refused(spark, ga_table):
         grouped_aggs(spark, f"{d}/b", f"{d}/m", ["flag"], ["dq"])
 
 
-def test_grouped_aggs_plan_two_exchanges(spark, ga_table):
-    _sdf, out, man = ga_table
-    df = grouped_aggs(spark, out, man, ["flag", "status"], ["qty", "price"])
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_ex = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_ex <= 2, plan
-
-
 def test_grouped_aggs_minmax(spark, ga_table):
     sdf, out, man = ga_table
     got = {(r["flag"], r["status"]):

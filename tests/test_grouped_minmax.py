@@ -116,16 +116,6 @@ def test_grouped_minmax_d128_refused(spark, gmm_table):
         grouped_minmax(spark, f"{d}/b", f"{d}/m", "flag", "w").collect()
 
 
-def test_grouped_minmax_plan_two_exchanges(spark, gmm_table):
-    """Same structural contract as grouped_sum: one partial-fold
-    exchange plus the broadcast of the manifest's valid pairs."""
-    _sdf, out, man = gmm_table
-    df = grouped_minmax(spark, out, man, "flag", "val")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n_ex = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_ex <= 2, plan
-
-
 def test_grouped_topk_matches_catalyst(spark, gmm_table):
     """Per-group ORDER BY LIMIT k vs a Catalyst window — value SETS per
     (group, rank window) must match; ties make exact rank order

@@ -174,18 +174,25 @@ def test_byte_predicate_stats_filter_is_jvm_side(spark, encoded):
 def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory):
     """Compressed-domain aggregates must shuffle exactly once — the
     final fold over partial rows — and their scan must prune to the
-    aggregated column's block leaf (+ stats for predicates).  If a
+    aggregated columns' block leaves (+ stats for predicates).  If a
     regroup or repartition sneaks in before the partials, the 'one tiny
-    shuffle' claim is dead at 100 TB."""
-    from boltspark.engine.agg import column_sum, grouped_sum, value_counts
+    shuffle' claim is dead at 100 TB.  Every operator on the shared
+    aggregate core is one more input here."""
+    from boltspark.engine.agg import (column_count, column_minmax,
+                                      column_sum, column_sums,
+                                      grouped_aggs, grouped_distinct_approx,
+                                      grouped_minmax, grouped_sum,
+                                      value_counts)
     from boltspark.engine.filters import RangePredicate
 
     # the shared fixture has no numeric column; encode one with stars
+    # (and an exact-decimal copy of it)
     base = tmp_path_factory.mktemp("aggplans")
     path = str(base / "c.parquet")
     corpus.write_parquet(path, 1200, with_nullable=True)
-    res = encode_table(spark.read.parquet(path),
-                       str(base / "blocks"), str(base / "manifest"),
+    df = spark.read.parquet(path).withColumn(
+        "stars_dec", F.col("stars").cast("decimal(12,2)"))
+    res = encode_table(df, str(base / "blocks"), str(base / "manifest"),
                        target_partition_bytes=1 << 20)
     bp, mp = res.out_path, res.manifest_path
     pred = RangePredicate(column="stars", lower=100, upper=None,
@@ -194,9 +201,20 @@ def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory):
         "column_sum": _plan(column_sum(spark, bp, mp, "stars")),
         "column_sum_pred": _plan(column_sum(spark, bp, mp, "stars",
                                             predicate=pred)),
+        "column_sum_decimal": _plan(column_sum(spark, bp, mp, "stars_dec")),
+        "column_sums": _plan(column_sums(spark, bp, mp,
+                                         ["stars", "stars_dec"])),
+        "column_count": _plan(column_count(spark, bp, mp, "lang")),
+        "column_minmax": _plan(column_minmax(spark, bp, mp, "lang")),
         "value_counts": _plan(value_counts(spark, bp, mp, "lang")),
         "grouped_sum": _plan(grouped_sum(spark, bp, mp, "lang",
                                          "stars")),
+        "grouped_aggs": _plan(grouped_aggs(spark, bp, mp, ["lang", "repo"],
+                                           ["stars"], minmax=True)),
+        "grouped_minmax": _plan(grouped_minmax(spark, bp, mp, "lang",
+                                               "path")),
+        "grouped_distinct_approx": _plan(grouped_distinct_approx(
+            spark, bp, mp, "lang", "stars")),
     }
     import re
 
@@ -214,12 +232,10 @@ def test_aggregate_plan_one_tiny_exchange(spark, tmp_path_factory):
                          plan), (name, plan)
         assert "BroadcastHashJoin" in plan, name
         assert "MapInArrow" in plan, name
-    # column pruning: the sum's scan reads only the summed column's
-    # block leaf, never the giant content chunk
-    for name in ("column_sum", "value_counts"):
-        schemas = [s for s in _read_schemas(plans[name])
-                   if "cols:struct" in s]
-        assert schemas, plans[name]
+        # column pruning: the scan reads only the aggregated columns'
+        # block leaves, never the giant content chunk
+        schemas = [s for s in _read_schemas(plan) if "cols:struct" in s]
+        assert schemas, (name, plan)
         for s in schemas:
             assert "content" not in s, (name, s)
     # predicate variant additionally reads the stats leaf for the JVM

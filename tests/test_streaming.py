@@ -3,6 +3,7 @@ decode sees the union, epoch replays are idempotent."""
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -428,3 +429,113 @@ def test_grouped_sum_stream_matches_batch(spark, tmp_path):
                      n_parts=2, resume=False, run_id="e0")
         grouped_sum_stream(spark, f"{d2}/b", f"{d2}/m", "lang", "decv",
                            f"{d2}/out", f"{d2}/ckpt")
+
+
+def test_stream_sinks_fold_earlier_sink_columns(spark, tmp_path):
+    """Sink files keep their on-disk columns: partial files laid out as
+    earlier versions wrote them — (part_id, s_l, s_d, is_f, rows,
+    nulls) for SUM, (part_id, s_dec, rows, nulls) for decimal SUM,
+    (part_id, value, cnt) for value counts and (part_id, value, cnt,
+    nv, s_l, s_d, is_f) for grouped SUM — fold through read_sum /
+    read_value_counts / read_grouped_sum to the batch operators'
+    answers on the same table."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from boltspark.engine import agg
+    from boltspark.engine.manifest import valid_pairs_df
+    from boltspark.streaming.agg_stream import (read_grouped_sum, read_sum,
+                                                read_value_counts)
+
+    d = str(tmp_path)
+    src = spark.range(3000).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") % 7 != 0, F.col("id") % 97).alias("n"),
+        F.when(F.col("id") % 11 != 0, F.col("id") * 0.25).alias("q"),
+        F.when(F.col("id") % 13 != 0, ((F.col("id") * 37) % 100000) / 100)
+        .cast("decimal(12,2)").alias("price"),
+        F.when(F.col("id") % 17 != 0,
+               F.element_at(F.array(*map(F.lit, "ANR")),
+                            (F.col("id") % 3 + 1).cast("int"))).alias("flag"))
+    b, m = f"{d}/b", f"{d}/m"
+    encode_table(src, b, m, key_cols=("k",), n_parts=2, resume=False,
+                 run_id="e0")
+    pids = sorted(r[0] for r in valid_pairs_df(spark, m).collect())
+    rows = src.collect()
+    # one partial row per (half of the rows, group): the fold only adds
+    halves = [[r for r in rows if r["k"] % 2 == h] for h in (0, 1)]
+
+    def part_id(h):
+        return pids[h % len(pids)]
+
+    def write(name, schema, records):
+        os.makedirs(f"{d}/{name}/run_id=e0")
+        pq.write_table(pa.Table.from_pylist(records, schema=schema),
+                       f"{d}/{name}/run_id=e0/part-00000.parquet")
+
+    def nonnull(rs, c):
+        return [r[c] for r in rs if r[c] is not None]
+
+    pid_t = ("part_id", pa.int32())
+    sum_t = pa.schema([pid_t, ("s_l", pa.int64()), ("s_d", pa.float64()),
+                       ("is_f", pa.bool_()), ("rows", pa.int64()),
+                       ("nulls", pa.int64())])
+    write("s_n", sum_t, [
+        {"part_id": part_id(h), "s_l": sum(nonnull(rs, "n")), "s_d": 0.0,
+         "is_f": False, "rows": len(rs),
+         "nulls": len(rs) - len(nonnull(rs, "n"))}
+        for h, rs in enumerate(halves)])
+    write("s_q", sum_t, [
+        {"part_id": part_id(h), "s_l": 0, "s_d": float(sum(nonnull(rs, "q"))),
+         "is_f": True, "rows": len(rs),
+         "nulls": len(rs) - len(nonnull(rs, "q"))}
+        for h, rs in enumerate(halves)])
+    write("s_dec", pa.schema([pid_t, ("s_dec", pa.decimal128(38, 0)),
+                              ("rows", pa.int64()), ("nulls", pa.int64())]), [
+        {"part_id": part_id(h),
+         "s_dec": sum(nonnull(rs, "price"), Decimal(0)).scaleb(2),
+         "rows": len(rs), "nulls": len(rs) - len(nonnull(rs, "price"))}
+        for h, rs in enumerate(halves)])
+    by_flag = [(h, f, [r for r in rs if r["flag"] == f])
+               for h, rs in enumerate(halves) for f in ("A", "N", "R", None)]
+    write("s_vc", pa.schema([pid_t, ("value", pa.string()),
+                             ("cnt", pa.int64())]), [
+        {"part_id": part_id(h), "value": f, "cnt": len(rs)}
+        for h, f, rs in by_flag])
+    write("s_gs", pa.schema([pid_t, ("value", pa.string()),
+                             ("cnt", pa.int64()), ("nv", pa.int64()),
+                             ("s_l", pa.int64()), ("s_d", pa.float64()),
+                             ("is_f", pa.bool_())]), [
+        {"part_id": part_id(h), "value": f, "cnt": len(rs),
+         "nv": len(nonnull(rs, "q")), "s_l": 0,
+         "s_d": float(sum(nonnull(rs, "q"))), "is_f": True}
+        for h, f, rs in by_flag])
+
+    def one(df):
+        return df.collect()[0].asDict()
+
+    assert (one(read_sum(spark, f"{d}/s_n", m, "n"))
+            == one(agg.column_sum(spark, b, m, "n")))
+    got, exp = (one(read_sum(spark, f"{d}/s_q", m, "q")),
+                one(agg.column_sum(spark, b, m, "q")))
+    assert got.pop("sum_value") == pytest.approx(exp.pop("sum_value"),
+                                                 rel=1e-12)
+    assert got == exp
+    got, exp = (one(read_sum(spark, f"{d}/s_dec", m, "price")),
+                one(agg.column_sum(spark, b, m, "price")))
+    assert str(got["sum_value"]) == str(exp["sum_value"])  # digit-exact
+    assert got == exp
+    assert ({r["value"]: r["cnt"] for r in
+             read_value_counts(spark, f"{d}/s_vc", m).collect()}
+            == {r["value"]: r["cnt"] for r in
+                agg.value_counts(spark, b, m, "flag").collect()})
+    got = {r["value"]: (r["sum_value"], r["cnt"]) for r in
+           read_grouped_sum(spark, f"{d}/s_gs", m).collect()}
+    exp = {r["value"]: (r["sum_value"], r["cnt"]) for r in
+           agg.grouped_sum(spark, b, m, "flag", "q").collect()}
+    assert set(got) == set(exp) == {"A", "N", "R", None}
+    for k, (es, ec) in exp.items():
+        assert got[k][1] == ec, k
+        assert got[k][0] == pytest.approx(es, rel=1e-12), k
