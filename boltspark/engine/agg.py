@@ -6,22 +6,23 @@ blocks WITHOUT materializing rows — optionally under a pushed predicate
 The reference stops at zone statistics (footer min/max,
 parquet_metadata_thrift.rs:657); this module pushes whole aggregations
 into the encoded domain, the classic "compute on compressed data" move
-of column stores.  The core has three parts:
+of column stores.  Aggregates read through the read path decode_table
+shares (engine/decode.py): ``resolve_predicates`` maps dotted
+struct-leaf predicate paths to flat leaves, ``scan_blocks`` projects
+only the block leaves an aggregate needs (plus the stats leaf of every
+predicate column), applies the JVM zone prefilter and broadcast-joins
+the manifest's valid (part_id, run_id) pairs, and ``block_groups``
+runs each group's predicate cascade once: zone maps answer all/none
+without opening a block, groups where only SOME rows survive get a row
+mask.
 
-* ``_scan`` projects only the block leaves an aggregate needs (plus the
-  stats leaf of every predicate column), applies the JVM zone prefilter
-  so provably-dead groups never cross into Python, and broadcast-joins
-  the manifest's valid (part_id, run_id) pairs;
-* ``_groups`` walks a task's surviving block groups and resolves each
-  group's predicate once: zone maps answer all/none without opening a
-  block, groups where only SOME rows survive get a row mask;
-* ``_block_partial`` is the one per-block partial kernel.  It takes
-  0..N GROUP BY dimensions (0 = a global aggregate; a mixed-radix
-  composite code for N >= 2) and computes, per value column, the lanes
-  count / valid count, int64 + double sum, exact unscaled decimal sum
-  (int64 low words and d128 word pairs) and typed min/max (byte values
-  by dictionary rank).  ``_fold`` is the one final
-  ``groupBy(dims).agg(...)`` over its partial rows.
+Over those groups ``_block_partial`` is the one per-block partial
+kernel.  It takes 0..N GROUP BY dimensions (0 = a global aggregate; a
+mixed-radix composite code for N >= 2) and computes, per value column,
+the lanes count / valid count, int64 + double sum, exact unscaled
+decimal sum (int64 low words and d128 word pairs) and typed min/max
+(byte values by dictionary rank).  ``_fold`` is the one final
+``groupBy(dims).agg(...)`` over its partial rows.
 
 The compressed-domain shortcuts are cases inside that kernel, chosen
 from each block's codec: without group dimensions ``rle`` blocks reduce
@@ -37,7 +38,7 @@ n_distinct tiny rows instead of n_rows values.
 The public sum/count/avg/min/max/value_counts/distinct/grouped
 operators are thin shapes over the core.  The sketch operators
 (HyperLogLog distinct, quantile summaries, top-k) keep their own lanes
-but iterate the same ``_groups``.
+but iterate the same ``block_groups``.
 """
 
 from __future__ import annotations
@@ -50,9 +51,10 @@ from pyspark.sql import types as T
 from ..kernels import block as blockmod
 from ..kernels import dictionary, lists, strings
 from . import manifest as manifestmod
+from .decode import block_groups, resolve_predicates, scan_blocks
 from .filters import Predicate
 from .memutil import trimmed
-from .schema import PART_ID, read_blocks as schema_read_blocks
+from .schema import PART_ID
 
 
 def _fields(meta: dict) -> dict:
@@ -90,99 +92,6 @@ def _open_dense(blk: bytes):
 
 def _n_sel(n_rows: int, mask) -> int:
     return n_rows if mask is None else int(mask.sum())
-
-
-def _normalize_predicates(predicate) -> list[Predicate]:
-    if predicate is None:
-        return []
-    return predicate if isinstance(predicate, list) else [predicate]
-
-
-def _pred_cols(predicates) -> list[str]:
-    """Ordered dedup of every leaf column the predicates touch
-    (composite OR/AND predicates span several columns)."""
-    from .filters import pred_columns
-
-    return pred_columns(predicates)
-
-
-def _resolve_mask(blk_cols, st_cols, i: int, predicates):
-    """The decoder's zone/mask cascade for one block group -> False (no
-    row survives) | None (every row does) | full-length bool mask
-    (decode.eval_group_predicate reused, so dictionary-level predicate
-    evaluation, the ternary null rule, and composite OR/NOT semantics
-    apply identically here)."""
-    from .decode import eval_group_predicate
-
-    blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
-    st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
-    mask = None
-    for pred in predicates:
-        verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
-        if verdict == "none":
-            return False
-        if pmask is not None:
-            mask = pmask if mask is None else (mask & pmask)
-            if not mask.any():
-                return False
-    return mask
-
-
-def _scan(spark: SparkSession, blocks_path: str, manifest_path: str,
-          columns: list[str], predicates: list[Predicate],
-          run_ids: list[str] | None = None,
-          meta: dict | None = None) -> DataFrame:
-    """The one blocks projection every aggregate reads: part_id, run_id,
-    n_rows, one ``__b_<col>`` block leaf per needed column (the scan's
-    ReadSchema prunes to exactly these leaves — never the giant content
-    chunk) and the ``__st_<col>`` stats leaf of every predicate column.
-    ``run_ids`` scopes the scan to some runs (time travel, streaming
-    epochs: parquet run_id stats prune the rest).  The JVM zone
-    prefilter drops provably-dead groups before their bytes cross into
-    Python; the broadcast join keeps only the manifest's valid pairs."""
-    if meta is None:
-        meta = manifestmod.table_meta(spark, manifest_path)
-    pcols = _pred_cols(predicates)
-    for c in list(columns) + pcols:
-        if c not in meta["columns"]:
-            raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
-    leaf = lambda c, f: F.col("cols").getField(c).getField(f)  # noqa: E731
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    proj += [leaf(c, "block").alias(f"__b_{c}")
-             for c in dict.fromkeys(list(columns) + pcols)]
-    proj += [leaf(c, "stats").alias(f"__st_{c}") for c in pcols]
-    blocks = schema_read_blocks(spark, blocks_path, meta["columns"]).select(*proj)
-    if run_ids is not None:
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    for p in predicates:
-        keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-        if keep is not None:
-            blocks = blocks.filter(keep)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
-
-
-def _groups(batches, predicates: list[Predicate], columns: list[str]):
-    """A task's surviving block groups -> (part_id, n_rows, mask,
-    {column: block bytes | None}).  The per-batch preamble of every
-    aggregate lives here once: groups no row of which survives the
-    predicate are skipped, ``mask`` is None when every row survives and
-    a bool row mask otherwise, and a None block is a column the group's
-    run predates (schema evolution: every row of it is NULL)."""
-    pcols = _pred_cols(predicates)
-    for batch in batches:
-        get = dict(zip(batch.schema.names, batch.columns))
-        pids, grows = get[PART_ID], get["n_rows"]
-        blks = {c: get[f"__b_{c}"] for c in columns}
-        blk_cols = {c: get[f"__b_{c}"] for c in pcols}
-        st_cols = {c: get[f"__st_{c}"] for c in pcols}
-        for i in range(batch.num_rows):
-            mask = _resolve_mask(blk_cols, st_cols, i, predicates)
-            if mask is False:
-                continue
-            yield (pids[i].as_py(), grows[i].as_py(), mask,
-                   {c: (b[i].as_py() if b[i].is_valid else None)
-                    for c, b in blks.items()})
 
 
 # ---------------------------------------------------------------------------
@@ -573,12 +482,12 @@ def _block_partial(n_rows: int, mask, dims, values,
 
 
 def _partials(spark: SparkSession, blocks_path: str, manifest_path: str,
-              predicates: list[Predicate], dims: list[str],
+              predicate, dims: list[str],
               values: list[tuple[str, tuple]],
               run_ids: list[str] | None = None,
               meta: dict | None = None, counted: bool = True) -> DataFrame:
     """The one partial stage: ``_block_partial`` over every surviving
-    block group of ``_scan`` in one ``mapInArrow`` -> (part_id,
+    block group of the shared blocks scan in one ``mapInArrow`` -> (part_id,
     g0..g{N-1} typed by the group columns, cnt, per value column j:
     nv{j} and its lanes' columns), one row per (block, group present).
     part_id rides along so incremental consumers
@@ -613,6 +522,7 @@ def _partials(spark: SparkSession, blocks_path: str, manifest_path: str,
     atypes = {n: a for n, _s, a in cols}
     schema = T.StructType([T.StructField(n, s, True) for n, s, _a in cols])
     need = list(dict.fromkeys(list(dims) + [c for c, _l in values]))
+    predicates = resolve_predicates(meta, predicate)
 
     def arrow(a, t):
         a = a if isinstance(a, pa.Array) else pa.array(a)
@@ -625,7 +535,8 @@ def _partials(spark: SparkSession, blocks_path: str, manifest_path: str,
 
     def gen(batches):
         acc, n_acc = {n: [] for n in names}, 0
-        for pid, n_rows, mask, blks in _groups(batches, predicates, need):
+        for pid, n_rows, mask, blks in block_groups(batches, predicates,
+                                                    need):
             part = _block_partial(
                 n_rows, mask, [(blks[c], t, ib) for c, t, ib in dspec],
                 [(blks[c], lanes, t, dec) for c, lanes, t, dec in vspec],
@@ -641,8 +552,8 @@ def _partials(spark: SparkSession, blocks_path: str, manifest_path: str,
         if n_acc:
             yield flush(acc)
 
-    blocks = _scan(spark, blocks_path, manifest_path, need, predicates,
-                   run_ids=run_ids, meta=meta)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, need,
+                         predicates, run_ids=run_ids)
     return blocks.mapInArrow(trimmed(gen), schema)
 
 
@@ -697,9 +608,8 @@ def _aggregate(spark: SparkSession, blocks_path: str, manifest_path: str,
                run_ids: list[str] | None = None,
                meta: dict | None = None) -> DataFrame:
     """Partials + fold: the whole core for one aggregate."""
-    return _fold(_partials(spark, blocks_path, manifest_path,
-                           _normalize_predicates(predicate), dims, values,
-                           run_ids=run_ids, meta=meta))
+    return _fold(_partials(spark, blocks_path, manifest_path, predicate,
+                           dims, values, run_ids=run_ids, meta=meta))
 
 
 def _scale(dt) -> int | None:
@@ -856,9 +766,8 @@ def column_distinct(spark: SparkSession, blocks_path: str,
     only per-block distinct sets cross the shuffle — a 100 TB low-
     cardinality column folds to n_blocks x n_distinct tiny rows.
     Returns one column ``value``; count() it for COUNT(DISTINCT)."""
-    partials = _partials(spark, blocks_path, manifest_path,
-                         _normalize_predicates(predicate), [column], [],
-                         run_ids=run_ids, counted=False)
+    partials = _partials(spark, blocks_path, manifest_path, predicate,
+                         [column], [], run_ids=run_ids, counted=False)
     partials = partials.where(F.col("g0").isNotNull()).select("g0")
     return _fold(partials).select(F.col("g0").alias("value"))
 
@@ -1029,7 +938,7 @@ def grouped_minmax(spark: SparkSession, blocks_path: str,
 
 
 # ---------------------------------------------------------------------------
-# sketch operators: their own lanes over the same _groups
+# sketch operators: their own lanes over the same block_groups
 # ---------------------------------------------------------------------------
 
 
@@ -1087,7 +996,7 @@ def _block_hashes(blk, n_rows: int, mask):
 def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
                   column: str, p: int) -> DataFrame:
     """Per-(task, part_id) HyperLogLog register partials over one
-    ``_scan`` frame -> (part_id, regs binary, rows, nulls).  part_id
+    ``scan_blocks`` frame -> (part_id, regs binary, rows, nulls).  part_id
     rides along so incremental consumers (streaming/agg_stream.py) can
     re-validate partials against the manifest's valid pairs after
     compaction; registers merge commutatively (elementwise max), so any
@@ -1096,7 +1005,8 @@ def _hll_partials(blocks: DataFrame, predicates: list[Predicate],
 
     def gen(batches):
         acc: dict[int, list] = {}  # pid -> [regs, rows, nulls]
-        for pid, n_rows, mask, blks in _groups(batches, predicates, [column]):
+        for pid, n_rows, mask, blks in block_groups(batches, predicates,
+                                                    [column]):
             a = acc.setdefault(pid, [hll.empty_registers(p), 0, 0])
             h, n_sel, n_valid = _block_hashes(blks[column], n_rows, mask)
             a[1] += n_sel
@@ -1181,15 +1091,16 @@ def column_distinct_approx(spark: SparkSession, blocks_path: str,
     variant over a growing table see streaming/agg_stream.py
     ``distinct_stream``/``read_distinct`` (same partials, same
     estimate)."""
-    predicates = _normalize_predicates(predicate)
-    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
-                   run_ids=run_ids)
+    meta = manifestmod.table_meta(spark, manifest_path)
+    predicates = resolve_predicates(meta, predicate)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, [column],
+                         predicates, run_ids=run_ids)
     return _fold_hll(_hll_partials(blocks, predicates, column, p), column, p)
 
 
 def _grouped_sketch_partials(spark: SparkSession, blocks_path: str,
                              manifest_path: str, group_column: str,
-                             value_column: str, predicates, run_ids,
+                             value_column: str, predicate, run_ids,
                              sketch, fields: list[tuple]) -> DataFrame:
     """Per-(block, group) sketch partials of ``value_column`` -> (value,
     <fields>).  ``sketch(kept, cnt, segments, tag, ranked)`` turns one
@@ -1199,11 +1110,12 @@ def _grouped_sketch_partials(spark: SparkSession, blocks_path: str,
     meta = manifestmod.table_meta(spark, manifest_path)
     gdt = _fields(meta)[group_column].dataType
     dims = [(_arrow_type(spark, gdt), _is_bytes(gdt))]
+    predicates = resolve_predicates(meta, predicate)
     schema = T.StructType([T.StructField("value", gdt, True)] + [
         T.StructField(n, t, True) for n, t in fields])
 
     def gen(batches):
-        for _pid, n_rows, mask, blks in _groups(
+        for _pid, n_rows, mask, blks in block_groups(
                 batches, predicates, [group_column, value_column]):
             gid, _g, cnt, kept, keys = _group_ids(
                 [(blks[group_column], *dims[0])], n_rows, mask)
@@ -1215,9 +1127,9 @@ def _grouped_sketch_partials(spark: SparkSession, blocks_path: str,
                 yield pa.RecordBatch.from_arrays(
                     [keys[0], *cols], names=["value"] + [n for n, _t in fields])
 
-    blocks = _scan(spark, blocks_path, manifest_path,
-                   [group_column, value_column], predicates,
-                   run_ids=run_ids, meta=meta)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta,
+                         list(dict.fromkeys([group_column, value_column])),
+                         predicates, run_ids=run_ids)
     return blocks.mapInArrow(trimmed(gen), schema)
 
 
@@ -1264,7 +1176,7 @@ def grouped_distinct_approx(spark: SparkSession, blocks_path: str,
 
     partials = _grouped_sketch_partials(
         spark, blocks_path, manifest_path, group_column, value_column,
-        _normalize_predicates(predicate), run_ids, sketch,
+        predicate, run_ids, sketch,
         [("regs", T.BinaryType()), ("cnt", T.LongType())])
     vtype = partials.schema["value"].dataType
 
@@ -1313,7 +1225,7 @@ def _block_summary(blk, n_rows: int, mask, k: int):
 def _quantile_partials(blocks: DataFrame, predicates: list[Predicate],
                        column: str, k: int, task_k: int) -> DataFrame:
     """Per-(task, part_id) equi-depth summary partials over one
-    ``_scan`` frame -> (part_id, vs, ws, rows, nulls).  part_id rides
+    ``scan_blocks`` frame -> (part_id, vs, ws, rows, nulls).  part_id rides
     along so incremental consumers (streaming/agg_stream.py) can
     re-validate partials against the manifest after compaction;
     summaries merge by weighted concatenation, so any regrouping only
@@ -1323,7 +1235,8 @@ def _quantile_partials(blocks: DataFrame, predicates: list[Predicate],
 
     def gen(batches):
         acc: dict[int, list] = {}  # pid -> [summaries, rows, nulls]
-        for pid, n_rows, mask, blks in _groups(batches, predicates, [column]):
+        for pid, n_rows, mask, blks in block_groups(batches, predicates,
+                                                    [column]):
             a = acc.setdefault(pid, [[], 0, 0])
             smry, n_sel, n_valid = _block_summary(blks[column], n_rows,
                                                   mask, k)
@@ -1411,9 +1324,10 @@ def column_quantiles(spark: SparkSession, blocks_path: str,
     the incremental variant over a growing table see
     streaming/agg_stream.py ``quantile_stream``/``read_quantiles``."""
     plist = _probs(probs)
-    predicates = _normalize_predicates(predicate)
-    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
-                   run_ids=run_ids)
+    meta = manifestmod.table_meta(spark, manifest_path)
+    predicates = resolve_predicates(meta, predicate)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, [column],
+                         predicates, run_ids=run_ids)
     return _fold_quantiles(
         _quantile_partials(blocks, predicates, column, k, task_k),
         column, plist)
@@ -1457,7 +1371,7 @@ def grouped_quantiles(spark: SparkSession, blocks_path: str,
 
     partials = _grouped_sketch_partials(
         spark, blocks_path, manifest_path, group_column, value_column,
-        _normalize_predicates(predicate), run_ids, sketch,
+        predicate, run_ids, sketch,
         [("vs", T.ArrayType(T.DoubleType())),
          ("ws", T.ArrayType(T.DoubleType())),
          ("rows", T.LongType()), ("nulls", T.LongType())])
@@ -1528,14 +1442,15 @@ def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
 
     if k <= 0:
         raise ValueError("k must be positive")
-    predicates = _normalize_predicates(predicate)
     meta = manifestmod.table_meta(spark, manifest_path)
     dt = _fields(meta)[column].dataType
+    predicates = resolve_predicates(meta, predicate)
     is_bytes, is_dec = _is_bytes(dt), isinstance(dt, T.DecimalType)
     out_t = _arrow_type(spark, dt)
 
     def gen(batches):
-        for _pid, _n, mask, blks in _groups(batches, predicates, [column]):
+        for _pid, _n, mask, blks in block_groups(batches, predicates,
+                                                 [column]):
             if blks[column] is None:
                 continue  # evolved column: all NULL, never ranks
             vals, tag = _block_topk(blks[column], mask, k, ascending, is_bytes)
@@ -1565,8 +1480,8 @@ def column_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
                     [out if out.type.equals(out_t) else out.cast(out_t)],
                     names=["value"])
 
-    blocks = _scan(spark, blocks_path, manifest_path, [column], predicates,
-                   run_ids=run_ids, meta=meta)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, [column],
+                         predicates, run_ids=run_ids)
     partials = blocks.mapInArrow(
         trimmed(gen), T.StructType([T.StructField("value", dt, True)]))
     order_col = F.col("value").asc() if ascending else F.col("value").desc()
@@ -1670,7 +1585,7 @@ def topk_rows(spark: SparkSession, blocks_path: str, manifest_path: str,
     vals = [r["value"] for r in column_topk(
         spark, blocks_path, manifest_path, column, k, ascending=ascending,
         predicate=predicate, run_ids=run_ids).collect()]
-    preds = list(_normalize_predicates(predicate))
+    preds = resolve_predicates(meta, predicate)
     if not vals:
         # order column is all-null (or empty) under the predicate: only
         # null rows can fill the LIMIT
@@ -1719,7 +1634,6 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
 
     if k <= 0:
         raise ValueError("k must be positive")
-    predicates = _normalize_predicates(predicate)
     meta = manifestmod.table_meta(spark, manifest_path)
     fields = _fields(meta)
     gdt, vdt = fields[group_column].dataType, fields[value_column].dataType
@@ -1730,9 +1644,10 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
             "supported; use column_topk per group or precision <= 18")
     dim = (_arrow_type(spark, gdt), _is_bytes(gdt))
     out_tv = _arrow_type(spark, vdt)
+    predicates = resolve_predicates(meta, predicate)
 
     def gen(batches):
-        for _pid, n_rows, mask, blks in _groups(
+        for _pid, n_rows, mask, blks in block_groups(
                 batches, predicates, [group_column, value_column]):
             gid, _g, _cnt, kept, keys = _group_ids(
                 [(blks[group_column], *dim)], n_rows, mask)
@@ -1761,9 +1676,9 @@ def grouped_topk(spark: SparkSession, blocks_path: str, manifest_path: str,
                 [garr, iarr if iarr.type.equals(out_tv) else iarr.cast(out_tv)],
                 names=["value", "item"])
 
-    blocks = _scan(spark, blocks_path, manifest_path,
-                   [group_column, value_column], predicates,
-                   run_ids=run_ids, meta=meta)
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta,
+                         list(dict.fromkeys([group_column, value_column])),
+                         predicates, run_ids=run_ids)
     partials = blocks.mapInArrow(trimmed(gen), T.StructType([
         T.StructField("value", gdt, True),
         T.StructField("item", vdt, False)]))
@@ -1851,7 +1766,7 @@ def grouped_topk_rows(spark: SparkSession, blocks_path: str,
                                   _session_aware(spark, vals[-1][1]),
                                   ascending, False)
             legs.append(AndPredicate([gleg, thr]))
-    preds = list(_normalize_predicates(predicate))
+    preds = resolve_predicates(meta, predicate)
     preds.append(OrPredicate(legs) if legs else
                  ConstPredicate(column=group_column, accept=False))
     dec_cols = None

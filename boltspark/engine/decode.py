@@ -23,6 +23,14 @@ blocks layout (schema.py) lets parquet itself do the pruning work:
 * no shuffle, ever — each blocks row is a self-contained block group,
   so decode is embarrassingly parallel over scan splits and peak memory
   is one block group per task.
+
+This module owns the ONE read path: ``resolve_predicates`` (dotted
+struct-leaf paths), ``scan_blocks`` (the blocks scan), ``block_groups``
+(the per-group cascade) and ``decode_group`` (output leaves).
+``decode_table`` uses all four; the aggregates (agg.py) reduce the
+groups instead of decoding them, ``stats.explain_scan`` reads a
+stats-only scan, and the DSv2 reader (sources/datasource.py) feeds its
+pyarrow file batches through ``block_groups`` + ``decode_group``.
 """
 
 from __future__ import annotations
@@ -250,105 +258,212 @@ def eval_group_predicate(pred, blk_of, st_of, i):
     return _decode_mask(s.as_py(), st_of(pred.column, i), pred)
 
 
-def _make_decoder(read_cols: list[str], out_cols: list[str], out_types: dict,
+def resolve_predicates(meta: dict, predicate) -> list[Predicate]:
+    """``predicate`` (None, one, or a list ANDed as a cascade) -> a list
+    whose every leaf names a flat encoded column.  A dotted struct-leaf
+    path ('meta.width') maps to its flat leaf name (engine/nest.py); a
+    column that is neither raises KeyError.  The one resolver of every
+    read path, so decode, the aggregates, explain_scan and the DSv2
+    reader accept exactly the same predicates."""
+    from . import nest
+    from .filters import replace_predicate
+
+    predicates = ([] if predicate is None
+                  else list(predicate) if isinstance(predicate, list)
+                  else [predicate])
+    if not predicates:
+        return []
+    flat = set(meta["columns"])
+    logical = logical_schema(meta)
+
+    def leaf(p):
+        if p.column in flat:
+            return p
+        c = nest.resolve_leaf(p.column, logical)
+        if c is None or c not in flat:
+            raise KeyError(f"unknown column {p.column}; encoded: "
+                           f"{meta['columns']}")
+        return replace_predicate(p, column=c)
+
+    return [p.map_leaves(leaf) for p in predicates]
+
+
+def logical_schema(meta: dict):
+    """The table's logical (pre-flattening) Spark schema."""
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(json.loads(
+        meta.get("logical_schema_json") or meta["schema_json"]))
+
+
+def scan_blocks(spark, blocks_path: str, manifest_path: str, meta: dict,
+                columns: list[str], predicates: list[Predicate], *,
+                part_ids: list[int] | None = None,
+                run_ids: list[str] | None = None,
+                seq_range: tuple[int, int] | None = None,
+                seq: bool = False, stats_only: bool = False):
+    """The one blocks scan of every Spark read path: part_id, run_id,
+    n_rows (+ ``seq``), one ``__blk_<c>`` block leaf per column of
+    ``columns`` and of the (resolved) predicates, and one ``__st_<c>``
+    stats leaf per predicate column.  The parquet ReadSchema prunes to
+    exactly these leaves — the other columns' bytes are never read.
+
+    The schema comes from the manifest's merged column list: appended
+    runs may have added columns (schema evolution), and groups from
+    older runs read null struct leaves — the semantics of a mergeSchema
+    footer sweep without its per-call job.  ``part_ids`` / ``run_ids`` /
+    ``seq_range`` are scan-level filters (pruning shows in PushedFilters
+    and skips row groups and files on min/max stats; tasks write groups
+    in seq order).  The JVM zone prefilter then drops groups that
+    provably cannot match a predicate (numeric range or byte min/max-
+    prefix bounds) before their block bytes cross into Python, which
+    re-checks every zone that remains; null stats conservatively pass.
+    The broadcast join keeps only the manifest's valid (part_id,
+    run_id) pairs.  ``stats_only`` (explain_scan) projects no block
+    leaf and keeps every group: a report must see what a read skips."""
+    from pyspark.sql import functions as F
+
+    for c in columns:
+        if c not in meta["columns"]:
+            raise KeyError(f"unknown column {c}; encoded: {meta['columns']}")
+    pcols = pred_columns(predicates)
+    leaf = lambda c, f: F.col("cols").getField(c).getField(f)  # noqa: E731
+    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
+    if seq:
+        proj.append(F.col("seq"))
+    if not stats_only:
+        proj += [leaf(c, "block").alias(f"__blk_{c}")
+                 for c in [*columns, *(c for c in pcols if c not in columns)]]
+    proj += [leaf(c, "stats").alias(f"__st_{c}") for c in pcols]
+    blocks = schema_read_blocks(spark, blocks_path, meta["columns"])
+    valid = manifestmod.valid_pairs_df(spark, manifest_path)
+    if part_ids is not None:
+        ids = [int(p) for p in part_ids]
+        blocks = blocks.filter(F.col(PART_ID).isin(ids))
+        valid = valid.filter(F.col(PART_ID).isin(ids))
+    if run_ids is not None:
+        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
+        valid = valid.filter(F.col("run_id").isin(list(run_ids)))
+    if seq_range is not None:
+        blocks = blocks.filter((F.col("seq") >= int(seq_range[0]))
+                               & (F.col("seq") <= int(seq_range[1])))
+    blocks = blocks.select(*proj)
+    if not stats_only:
+        for p in predicates:
+            keep = p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
+            if keep is not None:
+                blocks = blocks.filter(keep)
+    return blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+
+
+def block_groups(batches, predicates: list[Predicate], columns: list[str],
+                 row_window: tuple[int, int, dict] | None = None):
+    """The one per-group cascade over ``scan_blocks`` batches -> one
+    (part_id, n_rows, mask, {column: block bytes | None}) per block
+    group some row of which survives.  ``mask`` is None when every row
+    survives and a bool row mask otherwise; a None block is a column
+    the group's run predates (schema evolution: all of it is NULL).
+
+    The predicates narrow the mask in turn, and an empty mask drops the
+    group before any other column opens — the RowRangeSet cascade of
+    row_group_reader.rs:204-258.  Composite predicates (OR across
+    columns, NOT) evaluate through ``eval_group_predicate``, so their
+    leaves keep the zone and dictionary fast paths.
+
+    ``row_window`` = (start, end, {(part_id, run_id, seq) -> global row
+    offset of the group}) is decode's positional slice (the reference
+    positions INSIDE a row group after skipping whole ones,
+    row_group_reader.rs:188-198): groups outside it are dropped and
+    boundary groups start from a mask of the overlapping rows."""
+    pcols = pred_columns(predicates)
+    for batch in batches:
+        get = dict(zip(batch.schema.names, batch.columns))
+        pids, grows = get[PART_ID], get["n_rows"]
+        blks = {c: get[f"__blk_{c}"] for c in columns}
+        blk_cols = {c: get[f"__blk_{c}"] for c in pcols}
+        st_cols = {c: get[f"__st_{c}"] for c in pcols}
+        blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
+        st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
+        for i in range(batch.num_rows):
+            n_rows = grows[i].as_py()
+            mask = None
+            if row_window is not None:
+                start, end, offsets = row_window
+                goff = offsets.get((pids[i].as_py(), get["run_id"][i].as_py(),
+                                    get["seq"][i].as_py()))
+                if goff is None:
+                    continue  # group outside the slice (orphan/pruned)
+                lo, hi = max(start - goff, 0), min(end - goff, n_rows)
+                if hi <= lo:
+                    continue
+                if lo > 0 or hi < n_rows:  # boundary group: partial rows
+                    mask = np.zeros(n_rows, dtype=bool)
+                    mask[lo:hi] = True
+            for pred in predicates:
+                verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
+                if verdict == "none":
+                    mask = False
+                    break
+                if pmask is not None:
+                    mask = pmask if mask is None else (mask & pmask)
+                    if not mask.any():
+                        mask = False
+                        break
+            if mask is False:
+                continue
+            yield (pids[i].as_py(), n_rows, mask,
+                   {c: (b[i].as_py() if b[i].is_valid else None)
+                    for c, b in blks.items()})
+
+
+def decode_group(blks: dict, mask, n_rows: int,
+                 targets: list[tuple[str, pa.DataType]]) -> list[pa.Array]:
+    """One surviving block group's output leaves -> one Arrow array per
+    (leaf, Arrow type) of ``targets``.  A None block (a column the
+    group's run predates) reads back as nulls.  Late materialization:
+    when under a quarter of the rows survive the cascade, only those
+    rows of each column decode (fsst random access, dict code gather,
+    byte-slice gather) instead of decode-all + filter."""
+    late = mask is not None and int(mask.sum()) * 4 < len(mask)
+    arrays = []
+    for name, target in targets:
+        blk = blks[name]
+        if blk is None:
+            arr = pa.nulls(n_rows if mask is None else int(mask.sum()), target)
+        elif late:
+            values, validity, tag, _, _ = blockmod.decode_block_rows(blk, mask)
+            arr = _to_arrow_full(values, validity, tag, target)
+        else:
+            values, validity, tag, _, _ = blockmod.decode_block(blk)
+            arr = _to_arrow_full(values, validity, tag, target)
+            if mask is not None:
+                arr = arr.filter(pa.array(mask))
+        if not arr.type.equals(target):
+            arr = arr.cast(target)
+        arrays.append(arr)
+    return arrays
+
+
+def _make_decoder(targets: list[tuple[str, pa.DataType]],
                   predicates: list[Predicate], include_part_id: bool,
                   row_window: tuple[int, int, dict] | None = None):
     """Row-independent decoder: every input row is one complete block
-    group (all columns), so there is no regrouping state at all.
-
-    ``row_window`` = (start, end, {(part_id, run_id, seq) -> global row
-    offset of the group}) implements the positional slice
-    (the reference positions INSIDE a row group after skipping whole
-    ones, row_group_reader.rs:188-198): boundary groups decode only the
-    overlapping rows via the same late-materialization gather predicates
-    use."""
-
-    def decode_row(blk_cols, st_cols, i: int, part_id: int, n_rows: int,
-                   base_mask: np.ndarray | None = None):
-        # conjunctive cascade (row_group_reader.rs:204-258): each
-        # predicate narrows the surviving mask in turn; an all-false
-        # mask short-circuits the rest.  Composite predicates (OR
-        # across columns, NOT) evaluate through the same group-level
-        # hook, so their leaves keep the zone/dictionary fast paths.
-        mask = base_mask
-        blk_of = lambda c, j: blk_cols[c][j]  # noqa: E731
-        st_of = lambda c, j: st_cols[c][j].as_py()  # noqa: E731
-        for pred in predicates:
-            verdict, pmask = eval_group_predicate(pred, blk_of, st_of, i)
-            if verdict == "none":
-                return None
-            if pmask is not None:
-                mask = pmask if mask is None else (mask & pmask)
-                if not mask.any():
-                    return None
-        # late materialization: when few rows survive the cascade, decode
-        # only those rows of each output column (fsst random access, dict
-        # code gather, byte-slice gather) instead of decode-all + filter
-        late = mask is not None and int(mask.sum()) * 4 < len(mask)
-        arrays = []
-        fields = []
-        for name in out_cols:
-            target = out_types[name]
-            blk_scalar = blk_cols[name][i]
-            if not blk_scalar.is_valid:
-                # schema evolution: rows from runs that predate this
-                # column read back as nulls
-                n_out = int(mask.sum()) if mask is not None else n_rows
-                arr = pa.nulls(n_out, target)
-            elif late:
-                values, validity, tag, codec, _ = blockmod.decode_block_rows(
-                    blk_scalar.as_py(), mask)
-                arr = _to_arrow_full(values, validity, tag, target)
-            else:
-                values, validity, tag, codec, _ = blockmod.decode_block(
-                    blk_scalar.as_py())
-                arr = _to_arrow_full(values, validity, tag, target)
-                if mask is not None:
-                    arr = arr.filter(pa.array(mask))
-            if not arr.type.equals(target):
-                arr = arr.cast(target)
-            arrays.append(arr)
-            fields.append(pa.field(name, target, True))
-        if arrays and len(arrays[0]) == 0:
-            return None
-        if include_part_id:
-            arrays.append(pa.array(np.full(len(arrays[0]), part_id, np.int64)))
-            fields.append(pa.field(PART_ID, pa.int64(), False))
-        return pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+    group (all columns), so there is no regrouping state at all."""
+    fields = [pa.field(name, t, True) for name, t in targets]
+    if include_part_id:
+        fields.append(pa.field(PART_ID, pa.int64(), False))
+    schema = pa.schema(fields)
 
     def decode_stream(batches):
-        for batch in batches:
-            names = batch.schema.names
-            part_arr = batch.column(names.index(PART_ID))
-            nrows_arr = batch.column(names.index("n_rows"))
-            blk_cols = {c: batch.column(names.index(f"__blk_{c}"))
-                        for c in read_cols}
-            st_cols = {c: batch.column(names.index(f"__st_{c}"))
-                       for c in pred_columns(predicates)}
-            if row_window is not None:
-                run_arr = batch.column(names.index("run_id"))
-                seq_arr = batch.column(names.index("seq"))
-            for i in range(batch.num_rows):
-                n_rows = nrows_arr[i].as_py()
-                base_mask = None
-                if row_window is not None:
-                    start, end, offsets = row_window
-                    goff = offsets.get((part_arr[i].as_py(),
-                                        run_arr[i].as_py(),
-                                        seq_arr[i].as_py()))
-                    if goff is None:
-                        continue  # group outside the slice (orphan/pruned)
-                    lo = max(start - goff, 0)
-                    hi = min(end - goff, n_rows)
-                    if hi <= lo:
-                        continue
-                    if lo > 0 or hi < n_rows:  # boundary group: partial rows
-                        base_mask = np.zeros(n_rows, dtype=bool)
-                        base_mask[lo:hi] = True
-                out = decode_row(blk_cols, st_cols, i, part_arr[i].as_py(),
-                                 n_rows, base_mask)
-                if out is not None:
-                    yield out
+        for part_id, n_rows, mask, blks in block_groups(
+                batches, predicates, [c for c, _t in targets], row_window):
+            arrays = decode_group(blks, mask, n_rows, targets)
+            if arrays and len(arrays[0]) == 0:
+                continue
+            if include_part_id:
+                arrays.append(pa.array(np.full(len(arrays[0]), part_id,
+                                               np.int64)))
+            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
     return decode_stream
 
@@ -365,7 +480,6 @@ def decode_table(
     run_ids: list[str] | None = None,
     seq_range: tuple[int, int] | None = None,
     row_range: tuple[int, int] | None = None,
-    shuffle: bool | None = None,  # retained for API compat; decode never shuffles
 ):
     """Reconstruct the encoded table (or a projected, filtered slice).
 
@@ -395,22 +509,16 @@ def decode_table(
     positions even though run ids themselves are random hex.
 
     The wide blocks layout makes every row a complete block group, so
-    decode needs NO shuffle (``shuffle`` is accepted and ignored for
-    back-compat); ``n_tasks`` optionally repartitions for parallelism
-    when the blocks dataset has too few scan splits.
+    decode needs NO shuffle; ``n_tasks`` optionally repartitions for
+    parallelism when the blocks dataset has too few scan splits.
     """
-    import dataclasses
-
     from pyspark.sql import functions as F, types as T
 
     from . import nest
 
     meta = manifestmod.table_meta(spark, manifest_path)
-    all_cols = meta["columns"]  # flat storage names
-    logical = T.StructType.fromJson(
-        json.loads(meta.get("logical_schema_json") or meta["schema_json"]))
-    logical_by_name = {f.name: f for f in logical.fields}
-    out_logical = list(columns or [f.name for f in logical.fields])
+    logical_by_name = {f.name: f for f in logical_schema(meta).fields}
+    out_logical = list(columns or logical_by_name)
     unknown = set(out_logical) - set(logical_by_name)
     if unknown:
         # column resolution by name, unknown -> error (row_group_reader.rs:107-113)
@@ -421,39 +529,15 @@ def decode_table(
     for c in out_logical:
         f = logical_by_name[c]
         out_cols += nest.leaf_names(c, f.dataType, f.nullable)
-    predicates = ([] if predicate is None
-                  else predicate if isinstance(predicate, list) else [predicate])
-    read_cols = list(out_cols)
-
-    def _resolve_leaf_pred(p):
-        if p.column in all_cols:
-            return p
-        # dotted struct-leaf path ('meta.width') -> flat leaf name
-        leaf = nest.resolve_leaf(p.column, logical)
-        if leaf is None or leaf not in all_cols:
-            raise KeyError(f"predicate column {p.column} not encoded")
-        from .filters import replace_predicate
-
-        return replace_predicate(p, column=leaf)
-
-    resolved = []
-    for pred in predicates:
-        pred = pred.map_leaves(_resolve_leaf_pred)
-        resolved.append(pred)
-        for c in pred.columns:
-            if c not in read_cols:
-                read_cols.append(c)
-    predicates = resolved
+    predicates = resolve_predicates(meta, predicate)
 
     schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
     field_by_name = {f.name: f for f in schema.fields}
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    out_types = {}
-    out_fields = []
-    for c in out_cols:
-        t = field_by_name[c].dataType
-        out_types[c] = arrow_out_type(t, tz)
-        out_fields.append(T.StructField(c, t, True))
+    targets = [(c, arrow_out_type(field_by_name[c].dataType, tz))
+               for c in out_cols]
+    out_fields = [T.StructField(c, field_by_name[c].dataType, True)
+                  for c in out_cols]
     if include_part_id:
         out_fields.append(T.StructField(PART_ID, T.LongType(), False))
     out_schema = T.StructType(out_fields)
@@ -476,15 +560,9 @@ def decode_table(
         #      never the whole table's group list.
         # With run_ids the offsets are RUN-RELATIVE (positions among
         # the named runs' rows), matching the scan filter below.
-        valid0 = manifestmod.valid_pairs_df(spark, manifest_path)
-        if run_ids is not None:
-            valid0 = valid0.filter(F.col("run_id").isin(list(run_ids)))
-        gmeta = (schema_read_blocks(spark, blocks_path, all_cols)
-                 .select(PART_ID, "run_id", "seq", "n_rows"))
-        if part_ids is not None:
-            gmeta = gmeta.filter(
-                F.col(PART_ID).isin([int(p) for p in part_ids]))
-        gmeta = gmeta.join(F.broadcast(valid0), [PART_ID, "run_id"], "inner")
+        gmeta = scan_blocks(spark, blocks_path, manifest_path, meta, [], [],
+                            part_ids=part_ids, run_ids=run_ids, seq=True,
+                            stats_only=True)
         per_part = (gmeta.groupBy(PART_ID)
                     .agg(F.sum("n_rows").alias("p_rows"))
                     .orderBy(PART_ID).collect())
@@ -521,62 +599,14 @@ def decode_table(
             # pushed seq interval prunes non-overlapping groups at scan
             seq_range = (min(seqs_hit), max(seqs_hit))
 
-    # explicit leaf projection: only the requested block chunks (plus the
-    # predicate columns' stats strings) are in the ReadSchema — parquet
-    # never reads the other columns' bytes
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    if row_window is not None:
-        proj.append(F.col("seq"))
-    for c in read_cols:
-        proj.append(F.col("cols").getField(c).getField("block").alias(f"__blk_{c}"))
-    for c in pred_columns(predicates):
-        proj.append(
-            F.col("cols").getField(c).getField("stats").alias(f"__st_{c}"))
-    # schema from the manifest's merged column list (schema_read_blocks):
-    # appended runs may have added columns (schema evolution); groups
-    # from older runs read null struct leaves that decode null-fills
-    # below — same semantics as a mergeSchema footer sweep, without the
-    # per-call footer-merge job
-    blocks = schema_read_blocks(spark, blocks_path, all_cols)
-    if part_ids is not None:
-        # scan-level filter: pruning shows in PushedFilters and prunes
-        # row groups via part_id min/max stats
-        blocks = blocks.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
-    if run_ids is not None:
-        # incremental decode (streaming follower): only the named runs'
-        # blocks are read — pushed string filter prunes whole files
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    if seq_range is not None:
-        # seq interval pushdown (mid-partition skip): tasks write groups
-        # in seq order, so parquet row-group min/max stats prune here too
-        blocks = blocks.filter(
-            (F.col("seq") >= int(seq_range[0])) & (F.col("seq") <= int(seq_range[1])))
-    blocks = blocks.select(*proj)
-    # JVM-side zone prefilter: the typed stats are real columns, so
-    # groups that provably cannot match a predicate (numeric range OR
-    # byte min/max-prefix bounds) are dropped BEFORE their block bytes
-    # cross the JVM->Python boundary (Python re-checks zones for
-    # everything that remains — this is an additional cut, never the
-    # only one).  Null stats (evolved columns, list columns)
-    # conservatively pass.
-    keeps = [k for k in (p.jvm_zone_keep_cols(lambda c: F.col(f"__st_{c}"))
-                         for p in predicates) if k is not None]
-    if keeps:
-        cond = keeps[0]
-        for k in keeps[1:]:
-            cond = cond & k
-        blocks = blocks.filter(cond)
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    if part_ids is not None:
-        valid = valid.filter(F.col(PART_ID).isin([int(p) for p in part_ids]))
-    if run_ids is not None:
-        valid = valid.filter(F.col("run_id").isin(list(run_ids)))
-    blocks = blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, out_cols,
+                         predicates, part_ids=part_ids, run_ids=run_ids,
+                         seq_range=seq_range, seq=row_window is not None)
     if n_tasks:
         blocks = blocks.repartition(n_tasks)
     decoded = blocks.mapInArrow(
-        trimmed(_make_decoder(read_cols, out_cols, out_types, predicates,
-                      include_part_id, row_window)),
+        trimmed(_make_decoder(targets, predicates, include_part_id,
+                              row_window)),
         out_schema,
     )
     if any(nest.needs_flatten(logical_by_name[c].dataType)

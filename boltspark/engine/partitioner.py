@@ -148,7 +148,8 @@ def shuffle_preimages(n_parts: int) -> np.ndarray:
     ``repartition(P, col)`` places rows by ``pmod(murmur3(col), P)``;
     hashing the partition id itself throws 61 balls into 61 bins —
     ~37% of reduce tasks sit idle while the unlucky ones encode 2-4
-    partitions (the straggler tail measured in bench/ab_r06.py).
+    partitions (OPTIMIZATION_r06.md #1: 39 non-empty tasks for 61
+    partitions at sf1).
     Shuffling on ``preimages[part_id]`` instead makes the placement a
     bijection: every partition gets its own reduce task, deterministic
     and independent of the data.  Pure driver-side numpy, O(P) work."""

@@ -233,47 +233,21 @@ def explain_scan(spark: SparkSession, blocks_path: str, manifest_path: str,
     after its first predicate column's mask, so 'open' is the decoder's
     upper bound, not its exact cost.  Returns one row per verdict:
     (verdict, n_groups, n_rows)."""
-    import json
-
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    from . import nest
-    from .filters import pred_columns, replace_predicate
+    from .decode import resolve_predicates, scan_blocks
+    from .filters import pred_columns
     from .memutil import trimmed
 
-    predicates = ([] if predicate is None
-                  else predicate if isinstance(predicate, list)
-                  else [predicate])
+    # dotted struct-leaf paths resolve exactly as decode_table resolves
+    # them — explain must accept every predicate the decode it predicts
+    # accepts
     meta = manifestmod.table_meta(spark, manifest_path)
-    if predicates:
-        # dotted struct-leaf paths resolve to flat leaf names exactly as
-        # decode_table resolves them — explain must accept every
-        # predicate the decode it predicts accepts
-        all_cols = set(meta["columns"])
-        logical = T.StructType.fromJson(json.loads(
-            meta.get("logical_schema_json") or meta["schema_json"]))
-
-        def _resolve(p):
-            if p.column in all_cols:
-                return p
-            leaf = nest.resolve_leaf(p.column, logical)
-            if leaf is None or leaf not in all_cols:
-                raise KeyError(f"predicate column {p.column} not encoded")
-            return replace_predicate(p, column=leaf)
-
-        predicates = [p.map_leaves(_resolve) for p in predicates]
+    predicates = resolve_predicates(meta, predicate)
     cols = pred_columns(predicates)
-    proj = [F.col(PART_ID), F.col("run_id"), F.col("n_rows")]
-    for c in cols:
-        proj.append(F.col("cols").getField(c).getField("stats")
-                    .alias(f"__st_{c}"))
-    blocks = (schema_read_blocks(spark, blocks_path, meta["columns"])
-              .select(*proj))
-    if run_ids is not None:
-        blocks = blocks.filter(F.col("run_id").isin(list(run_ids)))
-    valid = manifestmod.valid_pairs_df(spark, manifest_path)
-    blocks = blocks.join(F.broadcast(valid), [PART_ID, "run_id"], "inner")
+    blocks = scan_blocks(spark, blocks_path, manifest_path, meta, [],
+                         predicates, run_ids=run_ids, stats_only=True)
 
     out_schema = T.StructType([
         T.StructField("verdict", T.StringType(), False),

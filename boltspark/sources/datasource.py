@@ -162,16 +162,12 @@ def _to_predicate(f: Filter):
 class BoltReader(DataSourceReader):
     def __init__(self, blocks_path: str, manifest_path: str,
                  columns: list[str] | None):
-        from pyspark.sql.types import StructType as ST
-
         from ..engine import nest
+        from ..engine.decode import logical_schema
 
         self.blocks_path = blocks_path
         self.meta, self.valid_pairs = _read_manifest(manifest_path)
-        all_flat = self.meta["columns"]
-        self.logical = ST.fromJson(json.loads(
-            self.meta.get("logical_schema_json") or self.meta["schema_json"]))
-        by_name = {f.name: f for f in self.logical.fields}
+        by_name = {f.name: f for f in logical_schema(self.meta).fields}
         self.out_cols = [c for c in (columns or list(by_name))]
         unknown = set(self.out_cols) - set(by_name)
         if unknown:
@@ -182,29 +178,16 @@ class BoltReader(DataSourceReader):
             f = by_name[c]
             self.out_leaves += nest.leaf_names(c, f.dataType, f.nullable)
         self.logical_by_name = by_name
-        self.all_flat = set(all_flat)
         self.predicates = []
 
     def pushFilters(self, filters):
-        import dataclasses
-
-        from ..engine import nest
-
-        def _resolve(p):
-            if p.column in self.all_flat:
-                return p
-            leaf = nest.resolve_leaf(p.column, self.logical)
-            if leaf is None or leaf not in self.all_flat:
-                raise KeyError(p.column)
-            from ..engine.filters import replace_predicate
-
-            return replace_predicate(p, column=leaf)
+        from ..engine.decode import resolve_predicates
 
         for f in filters:
             pred = _to_predicate(f)
             if pred is not None:
                 try:
-                    pred = pred.map_leaves(_resolve)
+                    [pred] = resolve_predicates(self.meta, pred)
                 except KeyError:
                     pred = None
             if pred is not None:
@@ -233,8 +216,8 @@ class BoltReader(DataSourceReader):
 
         flat_schema = ST.fromJson(json.loads(self.meta["schema_json"]))
         flat_by_name = {f.name: f for f in flat_schema.fields}
-        out_types = {c: dec.arrow_out_type(flat_by_name[c].dataType, "UTC")
-                     for c in self.out_leaves}
+        targets = [(c, dec.arrow_out_type(flat_by_name[c].dataType, "UTC"))
+                   for c in self.out_leaves]
         logical_types = {c: dec.arrow_out_type(
             self.logical_by_name[c].dataType, "UTC") for c in self.out_cols}
 
@@ -373,11 +356,12 @@ class BoltReader(DataSourceReader):
             return pa.StructArray.from_arrays(
                 children, fields=fields, mask=mask)
 
-        read_cols = list(self.out_leaves)
-        for p in self.predicates:
-            for c in p.columns:
-                if c not in read_cols:
-                    read_cols.append(c)
+        import pyarrow.compute as pc
+
+        from ..engine.filters import pred_columns
+
+        pcols = pred_columns(self.predicates)
+        read_cols = list(dict.fromkeys(self.out_leaves + pcols))
         pf = pq.ParquetFile(partition.value)
         # schema evolution: this file's run may predate some columns
         file_cols = {f.name for f in pf.schema_arrow.field("cols").type}
@@ -388,75 +372,40 @@ class BoltReader(DataSourceReader):
             if p.column not in file_cols and not p.null_allowed:
                 return  # whole-file skip: the column is all-null here
         cols = ["part_id", "run_id", "n_rows"] + [f"cols.{c}" for c in present]
+        schema = pa.schema([pa.field(c, logical_types[c], True)
+                            for c in self.out_cols])
         for batch in pf.iter_batches(batch_size=16, columns=cols):
-            names = batch.schema.names
-            part_arr = batch.column(names.index("part_id"))
-            run_arr = batch.column(names.index("run_id"))
-            nrows_arr = batch.column(names.index("n_rows"))
-            if "cols" in names:  # selection kept the struct nested
-                cols_arr = batch.column(names.index("cols"))
-                structs = {c: cols_arr.field(c) for c in present}
+            get = dict(zip(batch.schema.names, batch.columns))
+            if "cols" in get:  # selection kept the struct nested
+                structs = {c: get["cols"].field(c) for c in present}
             else:  # selection flattened the struct leaves to top level
-                structs = {c: batch.column(names.index(c)) for c in present}
-
-            # mirror engine decode_row's rules exactly (absent column =
-            # all-null; composites recurse per child)
-            def _blk_of(c, j, structs=structs):
-                leaf = structs.get(c)
-                if leaf is None or not leaf[j].is_valid:
-                    return None
-                return leaf[j]["block"]
-
-            def _st_of(c, j, structs=structs):
-                return structs[c][j]["stats"].as_py() or {}
-
-            for i in range(batch.num_rows):
-                if (part_arr[i].as_py(), run_arr[i].as_py()) not in self.valid_pairs:
-                    continue  # orphan blocks from a crashed run
-                mask = None
-                dead = False
-                for pred in self.predicates:
-                    verdict, pmask = dec.eval_group_predicate(
-                        pred, _blk_of, _st_of, i)
-                    if verdict == "none":
-                        dead = True
-                        break
-                    if pmask is not None:
-                        mask = pmask if mask is None else (mask & pmask)
-                        if not mask.any():
-                            dead = True
-                            break
-                if dead:
-                    continue
-                leaf_arrays = {}
-                for name in self.out_leaves:
-                    from ..kernels import block as blockmod
-
-                    target = out_types[name]
-                    if name not in structs or not structs[name][i].is_valid:
-                        # evolved column: null-fill for pre-evolution rows
-                        n_out = int(mask.sum()) if mask is not None \
-                            else nrows_arr[i].as_py()
-                        leaf_arrays[name] = pa.nulls(n_out, target)
-                        continue
-                    values, validity, tag, _, _ = blockmod.decode_block(
-                        structs[name][i]["block"].as_py())
-                    arr = dec._to_arrow_full(values, validity, tag, target)
-                    if mask is not None:
-                        arr = arr.filter(pa.array(mask))
-                    if not arr.type.equals(target):
-                        arr = arr.cast(target)
-                    leaf_arrays[name] = arr
+                structs = {c: get[c] for c in present}
+            # the file batch in the engine scan's layout (a column this
+            # file's run predates reads as null blocks), then the orphan
+            # blocks of crashed runs drop out against the valid pairs
+            n = batch.num_rows
+            scan = {"part_id": get["part_id"], "n_rows": get["n_rows"]}
+            for c in read_cols:
+                scan[f"__blk_{c}"] = (pc.struct_field(structs[c], "block")
+                                      if c in structs
+                                      else pa.nulls(n, pa.binary()))
+            for c in pcols:
+                scan[f"__st_{c}"] = (pc.struct_field(structs[c], "stats")
+                                     if c in structs else pa.nulls(n))
+            valid = [pair in self.valid_pairs for pair in zip(
+                get["part_id"].to_pylist(), get["run_id"].to_pylist())]
+            scan = pa.RecordBatch.from_pydict(scan).filter(pa.array(valid))
+            for _pid, n_rows, mask, blks in dec.block_groups(
+                    [scan], self.predicates, self.out_leaves):
+                leaves = dict(zip(self.out_leaves, dec.decode_group(
+                    blks, mask, n_rows, targets)))
                 arrays = [
                     assemble(c, self.logical_by_name[c].dataType,
-                             self.logical_by_name[c].nullable, leaf_arrays)
+                             self.logical_by_name[c].nullable, leaves)
                     for c in self.out_cols
                 ]
                 if arrays and len(arrays[0]):
-                    yield pa.RecordBatch.from_arrays(
-                        arrays, schema=pa.schema(
-                            [pa.field(c, logical_types[c], True)
-                             for c in self.out_cols]))
+                    yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 class BoltDataSource(DataSource):
@@ -468,9 +417,10 @@ class BoltDataSource(DataSource):
         manifest = self.options.get("manifest")
         if not manifest:
             raise ValueError("boltspark source requires .option('manifest', path)")
+        from ..engine.decode import logical_schema
+
         meta, _ = _read_manifest(manifest)
-        full = StructType.fromJson(json.loads(
-            meta.get("logical_schema_json") or meta["schema_json"]))
+        full = logical_schema(meta)
         cols = self.options.get("columns")
         if cols:
             wanted = [c.strip() for c in cols.split(",")]

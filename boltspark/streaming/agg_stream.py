@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..engine import agg as aggmod
 from ..engine import manifest as manifestmod
+from ..engine.decode import resolve_predicates, scan_blocks
 from ..engine.manifest import _MANIFEST_SCHEMA, META_KEY
 from ..engine.schema import PART_ID
 
@@ -64,10 +65,8 @@ def _core_stream(spark, blocks_path: str, manifest_path: str, out_path: str,
     stable on-disk sink columns (``sink``: SQL select expressions over
     the core's partial columns), so files written by earlier versions
     keep folding."""
-    predicates = aggmod._normalize_predicates(predicate)
-
     def write_run(run: str) -> None:
-        (aggmod._partials(spark, blocks_path, manifest_path, predicates,
+        (aggmod._partials(spark, blocks_path, manifest_path, predicate,
                           dims, values, run_ids=[run])
          .selectExpr(PART_ID, *sink)
          .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
@@ -190,11 +189,11 @@ def distinct_stream(
     folds n_runs x n_parts constant-size rows.  Exactly-once per run by
     the same run-keyed overwrite contract as sum_stream.  Returns the
     StreamingQuery."""
-    predicates = aggmod._normalize_predicates(predicate)
-
     def write_run(run: str) -> None:
-        blocks = aggmod._scan(spark, blocks_path, manifest_path, [column],
-                              predicates, run_ids=[run])
+        meta = manifestmod.table_meta(spark, manifest_path)
+        predicates = resolve_predicates(meta, predicate)
+        blocks = scan_blocks(spark, blocks_path, manifest_path, meta,
+                             [column], predicates, run_ids=[run])
         (aggmod._hll_partials(blocks, predicates, column, p)
          .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
 
@@ -231,11 +230,11 @@ def quantile_stream(
     rows into current percentiles without rescanning old runs.
     Exactly-once per run by the same run-keyed overwrite contract as
     sum_stream.  Returns the StreamingQuery."""
-    predicates = aggmod._normalize_predicates(predicate)
-
     def write_run(run: str) -> None:
-        blocks = aggmod._scan(spark, blocks_path, manifest_path, [column],
-                              predicates, run_ids=[run])
+        meta = manifestmod.table_meta(spark, manifest_path)
+        predicates = resolve_predicates(meta, predicate)
+        blocks = scan_blocks(spark, blocks_path, manifest_path, meta,
+                             [column], predicates, run_ids=[run])
         (aggmod._quantile_partials(blocks, predicates, column, k, task_k)
          .write.mode("overwrite").parquet(f"{out_path}/run_id={run}"))
 

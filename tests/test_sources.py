@@ -126,6 +126,34 @@ def test_boltspark_datasource_reads_blocks(spark, tmp_path):
     assert flt.count() == ref.count()
     assert flt.exceptAll(ref).count() + ref.exceptAll(flt).count() == 0
 
+    # a selective string filter: under a quarter of every group's rows
+    # survive, so the reader decodes only the surviving rows (late
+    # materialization) — same rows as decode_table under the same filter
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from boltspark.engine.filters import BytesPrefixPredicate
+    from boltspark.kernels import block as blockmod, strings
+
+    fracs = []
+    for f in glob.glob(f"{d}/b/*.parquet"):
+        for blk in pq.read_table(f, columns=["cols.path"]).column("path") \
+                .combine_chunks().field("block").to_pylist():
+            vals, _v, _t, _c, n_rows = blockmod.decode_block(blk)
+            paths = strings.to_arrow(vals).to_pylist()
+            fracs.append(sum(p.startswith(b"src/") for p in paths) / n_rows)
+    assert fracs and 0 < max(fracs) < 0.25, fracs
+    rowhash = F.sha2(F.to_json(F.struct(*df.columns)), 256).alias("h")
+    late = ds.load(spark, f"{d}/b", f"{d}/m").filter(
+        F.col("path").startswith("src/")).select(rowhash)
+    want = decode_table(spark, f"{d}/b", f"{d}/m",
+                        predicate=BytesPrefixPredicate(
+                            column="path", prefix=b"src/")).select(rowhash)
+    ref = df.filter(F.col("path").startswith("src/")).select(rowhash)
+    assert late.exceptAll(want).count() + want.exceptAll(late).count() == 0
+    assert late.exceptAll(ref).count() + ref.exceptAll(late).count() == 0
+
     # projection option
     pr = ds.load(spark, f"{d}/b", f"{d}/m", columns=["lang", "stars"])
     assert pr.columns == ["lang", "stars"] and pr.count() == 1200
